@@ -26,9 +26,7 @@ def main() -> None:
     ap.add_argument("--convs", type=int, default=20_000)
     ap.add_argument("--slices", type=int, default=8)
     ap.add_argument("--num-buckets", type=int, default=64)
-    ap.add_argument("--num-salts", type=int, default=8)
     ap.add_argument("--mode", choices=["cow", "mor"], default="cow")
-    ap.add_argument("--compact-every", type=int, default=None)
     ap.add_argument("--stream-dir", default=None)
     ap.add_argument("--json", dest="json_out", default=None)
     args = ap.parse_args()
@@ -64,9 +62,7 @@ def main() -> None:
         validation_path=os.path.join(base, "validation"),
         num_buckets=args.num_buckets,
         slice_lsn_width=max(1, args.events // args.slices),
-        num_salts=args.num_salts,
         merge_mode=args.mode,
-        compact_every_n_batches=args.compact_every,
         shuffle_partitions=args.cores,
     )
     runner = CdcIngestRunner(spark, cfg)

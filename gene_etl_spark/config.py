@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -45,7 +45,8 @@ class IngestConfig:
     # --- merge strategy ------------------------------------------------------
     # "cow": copy-on-write (read-optimized; rewrite ∝ touched buckets)
     # "mor": merge-on-read (write-optimized; append ∝ slice — the
-    #        10^10-event design point; pair with compact_every_n_batches)
+    #        10^10-event design point; pair with
+    #        compact_delta_files_per_bucket)
     merge_mode: str = "cow"
 
     # --- batch planning (reference analogue: batch_size/checkpoint_interval,
@@ -53,24 +54,8 @@ class IngestConfig:
     slice_lsn_width: int = 100_000  # events per LSN-bounded batch slice
     max_batches: int | None = None
 
-    # --- skew handling -------------------------------------------------------
-    # "agg": max_by hash aggregation — map-side combine neutralizes hot
-    #        keys before the shuffle (the scale default).
-    # "salted_window": two-phase salted row_number dedup.
-    dedup_strategy: str = "agg"
-    num_salts: int = 8          # salted_window fan-out
-    salt_threshold: int = 50_000  # only salt when slice rows/partition may skew
-
     # --- validation gates (reference: etl/validate.py:33-137) ---------------
     fail_on_critical: bool = True
-    # strict_pre_checks=False (default): pre-validation sums ride the
-    # dedup job via DataFrame.observe — the slice is scanned ONCE per
-    # batch; the hard gate (null keys / bad ops / oob lsn) is identical
-    # and still fires before anything is written. True restores the
-    # dedicated pre-pass, which additionally yields per-input-partition
-    # read counters and the exact lsn-uniqueness soft check (audit mode;
-    # one extra scan per batch).
-    strict_pre_checks: bool = False
     # wap_audit=True: every batch merges as a write-audit-publish STAGED
     # snapshot (real files, invisible to readers), the audit stage runs
     # over the staged read pruned to the touched buckets (built-in key-
@@ -82,17 +67,16 @@ class IngestConfig:
     wap_audit: bool = False
 
     # --- maintenance ---------------------------------------------------------
-    compact_every_n_batches: int | None = None  # auto-compact cadence
-    compact_max_files_per_bucket: int = 4
     # Threshold policy (the 10^10-event MoR setting): after each batch,
     # compact any bucket holding more than this many MoR delta files —
     # read amplification stays bounded (≤ 1 base + K deltas per bucket)
     # without anyone hand-scheduling maintenance. None = off.
     compact_delta_files_per_bucket: int | None = None
     # Metadata retention (the 10^10-event hygiene policy): every N
-    # batches, expire snapshots older than the last `expire_keep_last`
-    # (tag-pinned versions stay live) and vacuum unreferenced data files
-    # + manifest pieces. Without this, manifests/pieces/data accumulate
+    # batches committed to the table (counted across runs and surfaces,
+    # not per call), expire snapshots older than the last
+    # `expire_keep_last` (tag-pinned versions stay live) and vacuum
+    # unreferenced data files + manifest pieces. Without this, manifests/pieces/data accumulate
     # one-per-commit forever. None = off (manual maintenance only).
     expire_every_n_batches: int | None = None
     expire_keep_last: int = 20
@@ -116,7 +100,6 @@ class IngestConfig:
 
     # --- execution ----------------------------------------------------------
     shuffle_partitions: int | None = None  # default: match cores
-    extra: dict = field(default_factory=dict)
 
     def validate(self) -> None:
         """Hard config validation (reference: etl/config.py:46-71 enum checks)."""
@@ -124,14 +107,10 @@ class IngestConfig:
             raise ValueError("num_buckets must be >= 1")
         if self.slice_lsn_width < 1:
             raise ValueError("slice_lsn_width must be >= 1")
-        if self.num_salts < 1:
-            raise ValueError("num_salts must be >= 1")
         if not self.key_cols:
             raise ValueError("key_cols must be non-empty")
         if self.merge_mode not in ("cow", "mor"):
             raise ValueError("merge_mode must be 'cow' or 'mor'")
-        if self.dedup_strategy not in ("agg", "salted_window"):
-            raise ValueError("dedup_strategy must be 'agg' or 'salted_window'")
         if self.source_format not in ("parquet", "jsonl"):
             raise ValueError("source_format must be 'parquet' or 'jsonl'")
         if self.source_format == "jsonl" and not self.source_schema_json:
@@ -153,7 +132,5 @@ def config_hash(cfg: IngestConfig) -> str:
 
     Reference parity: get_config_hash (etl/config.py:194-203).
     """
-    payload = asdict(cfg)
-    payload["extra"] = dict(sorted(payload.get("extra", {}).items()))
-    blob = json.dumps(payload, sort_keys=True, default=str).encode()
+    blob = json.dumps(asdict(cfg), sort_keys=True, default=str).encode()
     return hashlib.sha256(blob).hexdigest()

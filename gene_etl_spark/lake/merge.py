@@ -16,15 +16,16 @@ fencing).
 Scale properties:
 - The target scan is pruned to the buckets the update slice touches
   (collected as a tiny list of ints ≤ num_buckets).
-- The join shuffles on the key; AQE skew-join plus the caller's salted
-  dedup keep hot conversations from serializing a task.
+- The join shuffles on the key; AQE skew-join plus the caller's max_by
+  dedup (map-side combine collapses a hot key before the shuffle) keep
+  hot conversations from serializing a task.
 - The rewrite repartitions on (bucket_id, conv_id) so every output file
   is bucket-pure while hot buckets still fan out across tasks.
 - Per-partition lineage counters come from the same joined plan (one
   target scan, persisted) — reference analogue of success/fail
   accounting at etl/persist.py:60-87.
 
-``updates`` must be key-deduped first (operators.dedup.lww_dedup); merge
+``updates`` must be key-deduped first (operators.dedup.lww_dedup_agg); merge
 asserts nothing and trusts the contract, like Iceberg's MERGE requires a
 unique source key (cardinality check left to the caller).
 """

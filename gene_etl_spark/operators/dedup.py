@@ -1,8 +1,10 @@
 """Key dedup operators.
 
-``lww_dedup`` is the core CDC operator (SURVEY.md §2.5 W2): keep the
+LWW dedup is the core CDC operator (SURVEY.md §2.5 W2): keep the
 last-writer event per key within a batch slice, resolved by
-``(lsn DESC, ts DESC)``.
+``(lsn DESC, ts DESC)``. The engine applies every slice through
+``lww_dedup_agg``; the window form ``lww_dedup`` remains as the gated
+``lww_dedup_salted`` operator query.
 
 Skew: one hot conversation can hold ~30% of a slice (FIXTURES.md §2), so
 a single window partition would serialize on one task. The salted

@@ -2,7 +2,7 @@
 
 ``cdc_replay`` derives a deterministic change stream from the `events`
 test table, replays it batch-wise through the REAL engine (lake format,
-salted LWW dedup, copy-on-write MERGE, ledger, fencing) into a temp
+max_by LWW dedup, copy-on-write MERGE, ledger, fencing) into a temp
 warehouse, and returns the final lake state. The DuckDB oracle states
 the same last-writer-wins materialization in pure SQL — so the whole
 ingest path is value-hash-gated by the driver, not just rows-checked.
@@ -64,8 +64,6 @@ def _replay_through_engine(spark: SparkSession, sf_dir: str, **cfg_kw) -> DataFr
             validation_path=os.path.join(base, "validation"),
             num_buckets=16,
             slice_lsn_width=max(1, int(max_lsn) // 4),  # 4-5 batches
-            num_salts=4,
-            salt_threshold=0,
         )
         defaults.update(cfg_kw)
         cfg = IngestConfig(**defaults)
@@ -85,17 +83,18 @@ def q_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cdc_replay_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge-on-read replay (delta appends + resolve-on-read) with a
-    mid-run compaction — the write-optimized engine path, value-gated
-    against the same pure-SQL oracle."""
+    """Merge-on-read replay (delta appends + resolve-on-read) with
+    mid-run threshold compaction (any bucket past one delta file is
+    rewritten) — the write-optimized engine path, value-gated against
+    the same pure-SQL oracle."""
     return _replay_through_engine(
-        spark, sf_dir, merge_mode="mor", compact_every_n_batches=2
+        spark, sf_dir, merge_mode="mor", compact_delta_files_per_bucket=1
     )
 
 
 def q_cdc_replay_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming replay: readStream → foreachBatch over the
-    same dedup+MERGE path, availableNow drain."""
+    """Structured Streaming replay: readStream → foreachBatch through the
+    batch runner's slice-apply core, availableNow drain."""
     from gene_etl_spark.config import IngestConfig
     from gene_etl_spark.lake.table import LakeTable
     from gene_etl_spark.streaming.stream import ingest_stream
@@ -166,8 +165,6 @@ def q_cdc_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             validation_path=os.path.join(base, "validation"),
             num_buckets=16,
             slice_lsn_width=max(1, int(max_lsn) // 4),
-            num_salts=4,
-            salt_threshold=0,
             merge_mode="mor",
         )
         runner = CdcIngestRunner(spark, cfg)
@@ -238,8 +235,6 @@ def q_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             validation_path=os.path.join(base, "validation"),
             num_buckets=16,
             slice_lsn_width=max(1, int(max_lsn) // 4),
-            num_salts=4,
-            salt_threshold=0,
             merge_mode="cow",
         )
         runner = CdcIngestRunner(spark, cfg)

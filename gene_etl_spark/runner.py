@@ -1,9 +1,14 @@
-"""CdcIngestRunner — the batch ingest loop.
+"""CdcIngestRunner — the batch ingest loop and the one slice-apply core.
 
 The Spark re-expression of the reference's 7-phase pipeline
 (etl/__init__.py:40-110), per SURVEY.md §3.1: read ledger → read LSN
-slice → validate (pre) → LWW dedup (salted) → MERGE INTO lake →
-validate (post) → append lineage + metrics → commit ledger.
+slice → validate (pre) → LWW dedup (max_by aggregate) → MERGE INTO lake
+→ validate (post) → append lineage + metrics → commit ledger.
+
+``apply_slice`` is that pipeline for one slice and ``maintain`` is the
+per-batch maintenance policy; the batch loop (``run``/``apply_batch``)
+and the streaming surface (``streaming/stream.py``) both call them, so
+the two surfaces share every gate, metric and retention rule.
 
 Exactly-once: a batch slice (start, end] is applied at most once —
 fencing consults both the ledger and the lake snapshot chain, so a crash
@@ -18,14 +23,13 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import SparkSession
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from gene_etl_spark.config import IngestConfig, config_hash
 from gene_etl_spark.lake.table import LakeTable
 from gene_etl_spark.ledger import Ledger
 from gene_etl_spark.metrics import MetricsTable
-from gene_etl_spark.operators.dedup import lww_dedup, lww_dedup_agg
+from gene_etl_spark.operators.dedup import lww_dedup_agg
 from gene_etl_spark.sources.binlog import BinlogSource
 from gene_etl_spark.validate import Validator
 
@@ -94,7 +98,30 @@ class CdcIngestRunner:
                 "skipped": True,
                 "reason": "already committed (fenced)",
             }
-        batch_id = uuid.uuid4().hex
+        return self.apply_slice(
+            self.source.read_slice(start_lsn, end_lsn),
+            start_lsn,
+            end_lsn,
+            batch_id=uuid.uuid4().hex,
+        )
+
+    def apply_slice(
+        self,
+        slice_df: DataFrame,
+        start_lsn: int,
+        end_lsn: int,
+        batch_id: str,
+        ledger_extra: dict | None = None,
+    ) -> dict:
+        """Apply one (start, end] slice of change events as one batch:
+        pre-gate → LWW dedup → MERGE → WAP publish → metrics → post-checks
+        → ledger. The caller owns fencing; both the batch loop and the
+        streaming epochs call this.
+
+        The slice is scanned ONCE: the pre-validation sums ride the dedup
+        job as observed metrics, and the merge's pre_commit_gate fires on
+        them after bucket discovery — after the sums exist but before any
+        lake file or manifest is written."""
         t0 = time.time()
         phases: dict[str, float] = {}
 
@@ -110,97 +137,37 @@ class CdcIngestRunner:
             except FileNotFoundError:
                 pass
 
-        fused = (
-            self.config.dedup_strategy == "agg"
-            and not self.config.strict_pre_checks
+        obs = Observation()
+        observed_df = slice_df.observe(
+            obs,
+            *self.validator.pre_check_exprs(
+                list(self.config.key_cols), start_lsn, end_lsn
+            ),
         )
-        if fused:
-            # FAST PATH (the scale default): the slice is scanned ONCE.
-            # Pre-validation sums ride the dedup job as observed metrics
-            # and the merge's pre_commit_gate fires on them after bucket
-            # discovery — i.e. after the sums exist but before any lake
-            # file or manifest is written, preserving the hard-gate
-            # contract without the dedicated 3-4 s/batch pre-pass the
-            # two-pass path pays (round-4 verdict item 7).
-            from pyspark.sql import Observation
+        deduped = lww_dedup_agg(
+            observed_df, key_cols=self.config.key_cols, order_cols=("lsn", "ts")
+        )
+        observed: dict = {}
 
-            obs = Observation()
-            slice_df = self.source.read_slice(start_lsn, end_lsn).observe(
-                obs,
-                *self.validator.pre_check_exprs(
-                    list(self.config.key_cols), start_lsn, end_lsn
-                ),
+        def gate():
+            observed.update(obs.get)
+            self.validator.pre_checks_from_observation(
+                observed, start_lsn, end_lsn, batch_id
             )
-            deduped = lww_dedup_agg(
-                slice_df, key_cols=self.config.key_cols, order_cols=("lsn", "ts")
-            )
-            observed: dict = {}
 
-            def gate():
-                observed.update(obs.get)
-                self.validator.pre_checks_from_observation(
-                    observed, start_lsn, end_lsn, batch_id
-                )
-
-            tp = time.time()
-            result = self.table.merge(
-                deduped,
-                batch_id=batch_id,
-                start_lsn=start_lsn,
-                end_lsn=end_lsn,
-                mode=self.config.merge_mode,
-                pre_commit_gate=gate,
-                stage_id=stage_id,
-            )
-            events_read = int(observed.get("events_read") or 0)
-            phases["merge_sec"] = round(time.time() - tp, 3)
-            phases.update(result.timings)
-            read_counters = [{"partition_id": -1, "events_read": events_read}]
-        else:
-            slice_df = self.source.read_slice(start_lsn, end_lsn).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            try:
-                # one fused pass: read-phase lineage counters + validation sums
-                tp = time.time()
-                read_counters = self.validator.pre_check_counters(
-                    slice_df, list(self.config.key_cols), start_lsn, end_lsn
-                )
-                self.validator.pre_checks(
-                    slice_df,
-                    list(self.config.key_cols),
-                    start_lsn,
-                    end_lsn,
-                    batch_id,
-                    counters=read_counters,
-                )
-                events_read = sum(r["events_read"] for r in read_counters)
-                phases["read_validate_sec"] = round(time.time() - tp, 3)
-
-                tp = time.time()
-                if self.config.dedup_strategy == "agg":
-                    deduped = lww_dedup_agg(
-                        slice_df, key_cols=self.config.key_cols, order_cols=("lsn", "ts")
-                    )
-                else:
-                    deduped = lww_dedup(
-                        slice_df,
-                        key_cols=self.config.key_cols,
-                        order_cols=("lsn", "ts"),
-                        num_salts=self.config.num_salts if events_read >= self.config.salt_threshold else 1,
-                    )
-                result = self.table.merge(
-                    deduped,
-                    batch_id=batch_id,
-                    start_lsn=start_lsn,
-                    end_lsn=end_lsn,
-                    mode=self.config.merge_mode,
-                    stage_id=stage_id,
-                )
-                phases["merge_sec"] = round(time.time() - tp, 3)
-                phases.update(result.timings)
-            finally:
-                slice_df.unpersist()
+        tp = time.time()
+        result = self.table.merge(
+            deduped,
+            batch_id=batch_id,
+            start_lsn=start_lsn,
+            end_lsn=end_lsn,
+            mode=self.config.merge_mode,
+            pre_commit_gate=gate,
+            stage_id=stage_id,
+        )
+        events_read = int(observed.get("events_read") or 0)
+        phases["merge_sec"] = round(time.time() - tp, 3)
+        phases.update(result.timings)
 
         if self.crash_after_merge:
             raise CrashInjected(f"crash injected after merge of batch {batch_id}")
@@ -229,18 +196,16 @@ class CdcIngestRunner:
             {
                 "batch_id": batch_id,
                 "phase": "read",
-                "partition_id": int(r["partition_id"]),
-                "events_read": int(r["events_read"]),
+                "partition_id": -1,
+                "events_read": events_read,
                 "wall_ms": wall_ms,
-            }
-            for r in read_counters
-        ] + [
+            },
             {
                 "batch_id": batch_id,
                 "phase": "read",
                 "partition_id": -1,
                 "dedup_dropped": int(events_read - applied),
-            }
+            },
         ] + [
             {
                 "batch_id": batch_id,
@@ -269,6 +234,7 @@ class CdcIngestRunner:
                 # SourceSnapshot lineage (reference models.py:166-180):
                 # which tranches fed this batch + source schema identity
                 "source_snapshot": self.source.snapshot(start_lsn, end_lsn),
+                **(ledger_extra or {}),
             },
         )
         return {
@@ -286,6 +252,43 @@ class CdcIngestRunner:
             "phases": phases,
             "skipped": False,
         }
+
+    def maintain(self) -> None:
+        """The per-batch maintenance policy, run after each batch or
+        epoch. The expiry cadence counts the batches committed to the
+        table (its cached fence map), not the batches of one call, so
+        short drains such as ``run(max_batches=1)`` still reach the
+        retention step."""
+        from gene_etl_spark.lake import maintenance as m
+
+        k = self.config.compact_delta_files_per_bucket
+        if k is not None:
+            # threshold policy: rewrite only buckets whose delta count
+            # exceeds K — read amplification stays ≤ 1 base + K deltas
+            # per bucket across unbounded ingest
+            m.compact_if_needed(self.table, max_delta_files=k)
+        ev = self.config.expire_every_n_batches
+        if ev and len(self.table.committed_batches()) % ev == 0:
+            # metadata retention: live-manifest count stays bounded
+            # (expire_keep_last + tag pins) and superseded data files /
+            # orphan pieces are reclaimed — without this, lake metadata
+            # grows one-per-commit forever. Tagged snapshots and
+            # unpublished WAP stages stay pinned.
+            m.expire_snapshots(self.table, keep_last=self.config.expire_keep_last)
+            m.vacuum(self.table, older_than_sec=self.config.vacuum_grace_sec)
+            retain = self.config.tombstone_retention_lsns
+            m.prune_tombstones(
+                self.table,
+                before_lsn=(
+                    None
+                    if retain is None
+                    else self.ledger.max_committed_end_lsn() - retain
+                ),
+            )
+        if self.config.ledger_compact_min_loose is not None:
+            self.ledger.compact_if_needed(
+                min_loose=self.config.ledger_compact_min_loose
+            )
 
     def _sweep_orphan_stages(self) -> None:
         """Abandon runner-owned (``wap-*``) stages left by a crash between
@@ -311,50 +314,9 @@ class CdcIngestRunner:
             max_batches or self.config.max_batches,
         )
         batches = []
-        for i, (lo, hi) in enumerate(plan, start=1):
+        for lo, hi in plan:
             batches.append(self.apply_batch(lo, hi))
-            every = self.config.compact_every_n_batches
-            if every and i % every == 0:
-                from gene_etl_spark.lake.maintenance import compact
-
-                compact(self.table, self.config.compact_max_files_per_bucket)
-            k = self.config.compact_delta_files_per_bucket
-            if k is not None:
-                # threshold policy: rewrite only buckets whose delta
-                # count exceeds K — read amplification stays ≤ 1 base +
-                # K deltas per bucket across unbounded ingest
-                from gene_etl_spark.lake.maintenance import compact_if_needed
-
-                compact_if_needed(self.table, max_delta_files=k)
-            ev = self.config.expire_every_n_batches
-            if ev and i % ev == 0:
-                # metadata retention in the loop: live-manifest count
-                # stays bounded (expire_keep_last + tag pins) and
-                # superseded data files / orphan pieces are reclaimed —
-                # without this, lake metadata grows one-per-commit
-                # forever (round-5 verdict item 1). Tagged snapshots and
-                # unpublished WAP stages stay pinned (soak-proven).
-                from gene_etl_spark.lake.maintenance import (
-                    expire_snapshots,
-                    prune_tombstones,
-                    vacuum,
-                )
-
-                expire_snapshots(self.table, keep_last=self.config.expire_keep_last)
-                vacuum(self.table, older_than_sec=self.config.vacuum_grace_sec)
-                retain = self.config.tombstone_retention_lsns
-                prune_tombstones(
-                    self.table,
-                    before_lsn=(
-                        None
-                        if retain is None
-                        else self.ledger.max_committed_end_lsn() - retain
-                    ),
-                )
-            if self.config.ledger_compact_min_loose is not None:
-                self.ledger.compact_if_needed(
-                    min_loose=self.config.ledger_compact_min_loose
-                )
+            self.maintain()
         wall = time.time() - t0
         events = sum(b.get("events_read", 0) for b in batches if not b.get("skipped"))
         return {

@@ -1,9 +1,12 @@
 """Structured Streaming ingest surface.
 
-``readStream`` over the binlog directory → ``foreachBatch`` applying the
-same salted-LWW-dedup + MERGE path as the batch runner (SURVEY.md §2.10:
-streaming is sugar over the same LSN-slice application). Exactly-once
-composes from three layers:
+``readStream`` over the binlog directory → ``foreachBatch`` handing each
+epoch to the batch runner's own slice-apply core
+(``CdcIngestRunner.apply_slice``: pre-gate, max_by LWW dedup, MERGE, WAP,
+metrics, post-checks, ledger) and maintenance step
+(``CdcIngestRunner.maintain``) — SURVEY.md §2.10: streaming is sugar
+over the same LSN-slice application. Exactly-once composes from three
+layers:
 
 - Spark's streaming checkpoint tracks which files each epoch consumed;
 - each epoch's MERGE is fenced by ``batch_id =
@@ -24,7 +27,7 @@ the ledger and the snapshot properties, so a subsequent *batch* run's
 instead of replanning the whole log from scratch.
 
 Late/out-of-order data: intra-epoch disorder is resolved by the LWW
-window; cross-epoch disorder by the MERGE guard (a later-arriving lower
+dedup; cross-epoch disorder by the MERGE guard (a later-arriving lower
 LSN loses to the applied row). Every epoch additionally drops events at
 or below the reconciled resume point (``Ledger.resume_lsn`` over ledger
 ∪ snapshot chain — the same contract batch resume uses), so a
@@ -44,11 +47,7 @@ import time
 from pyspark.sql import SparkSession
 
 from gene_etl_spark.config import IngestConfig
-from gene_etl_spark.lake.table import LakeTable
-from gene_etl_spark.ledger import Ledger
-from gene_etl_spark.metrics import MetricsTable
-from gene_etl_spark.operators.dedup import lww_dedup
-from gene_etl_spark.sources.binlog import BinlogSource
+from gene_etl_spark.runner import CdcIngestRunner
 
 
 def ingest_stream(
@@ -72,53 +71,20 @@ def ingest_stream(
     pipeline.ConversationDedupChain (conv lake → document rollup →
     dedup index, each leg fenced) all qualify. Each epoch's MERGE
     lands, then its change rows fold into the consumer (refresh is
-    fenced, so a replayed epoch re-folds nothing)."""
-    src_schema = None
-    if config.source_schema_json:
-        import json as _json
+    fenced, so a replayed epoch re-folds nothing).
 
-        import pyspark.sql.types as _T
-
-        src_schema = _T.StructType.fromJson(_json.loads(config.source_schema_json))
-    source = BinlogSource(
-        spark, config.events_path, schema=src_schema, fmt=config.source_format
-    )
-    schema = source.schema
-
-    if LakeTable.exists(config.lake_path):
-        table = LakeTable.load(spark, config.lake_path)
-    else:
-        import pyspark.sql.types as T
-
-        payload = [f for f in schema.fields if f.name not in ("op", "lsn", "event_ts")]
-        table = LakeTable.create(
-            spark,
-            config.lake_path,
-            T.StructType(payload),
-            key_cols=list(config.key_cols),
-            num_buckets=config.num_buckets,
-            stats_cols=list(config.stats_cols),
-        )
-    ledger = Ledger(config.ledger_path)
-    metrics = MetricsTable(spark, config.metrics_path)
+    A failed gate (pre-check, post-check or WAP audit) stops the query
+    and is re-raised as itself, e.g. ``ValidationError``. Under
+    ``wap_audit`` the failed epoch's stage is abandoned, so the epoch
+    replays (and re-audits) when the same checkpoint restarts."""
+    runner = CdcIngestRunner(spark, config)
+    runner.wap_auditors = wap_auditors or {}
+    table, ledger = runner.table, runner.ledger
     applied = {"epochs": 0, "events": 0}
-
-    validator = None
     if config.wap_audit:
-        # write-audit-publish on the streaming surface: each epoch's
-        # merge parks as a staged snapshot, is audited over its REAL
-        # merged files (same mode-aware built-ins + custom auditors as
-        # the batch runner), and only then publishes atomically. A
-        # failed audit abandons the stage and fails the query — the
-        # quarantined epoch replays (and re-audits) on restart, so a
-        # bad batch can never become readable. Orphan wap-* stages from
-        # a crash between stage and publish are swept here, exactly as
-        # the batch runner does at run() start.
-        from gene_etl_spark.lake import wap as _wap
-        from gene_etl_spark.validate import Validator
-
-        validator = Validator(spark, config.validation_path)
-        _wap.sweep_stages(table)
+        # orphan wap-* stages from a crash between stage and publish are
+        # swept here, exactly as the batch runner does at run() start
+        runner._sweep_orphan_stages()
 
     import hashlib
 
@@ -137,6 +103,7 @@ def ingest_stream(
     # single-writer per ledger, and this stream's own epochs only ever
     # carry LSNs above it.
     floor_lsn = ledger.resume_lsn(table)
+    failures: list[Exception] = []
 
     def apply_epoch(df, epoch_id: int) -> None:
         batch_id = f"stream-{ckpt_fp}-epoch-{epoch_id}"
@@ -175,98 +142,22 @@ def ingest_stream(
                 and legacy.get("end_lsn") == end_lsn
             ):
                 return  # fenced by a legacy-format commit of this same slice
-            deduped = lww_dedup(
-                cached,
-                key_cols=config.key_cols,
-                order_cols=("lsn", "ts"),
-                num_salts=config.num_salts if n >= config.salt_threshold else 1,
-            )
-            stage_id = f"wap-{start_lsn}-{end_lsn}" if config.wap_audit else None
-            result = table.merge(
-                deduped,
-                batch_id=batch_id,
-                mode=config.merge_mode,
-                start_lsn=start_lsn,
-                end_lsn=end_lsn,
-                stage_id=stage_id,
-            )
-            if stage_id is not None:
-                from gene_etl_spark.lake import wap
-
-                pub = wap.audit_and_publish(
-                    table,
-                    stage_id,
-                    validator=validator,
-                    key_cols=list(config.key_cols),
-                    batch_id=batch_id,
-                    merge_mode=config.merge_mode,
-                    deletes=result.deletes,
-                    touched_buckets=result.touched_buckets,
-                    auditors=wap_auditors,
-                )
-                result.snapshot_version = pub["snapshot_version"]
-            ledger.record(
-                batch_id=batch_id,
-                start_lsn=start_lsn,
-                end_lsn=end_lsn,
-                status="committed",
-                snapshot_version=result.snapshot_version,
-                extra={
-                    "events_read": n,
-                    "stream_epoch": epoch_id,
-                    "source_snapshot": source.snapshot(start_lsn, end_lsn),
-                },
-            )
-            metrics.append_rows(
-                [
-                    {
-                        "batch_id": batch_id,
-                        "phase": "apply",
-                        "partition_id": int(c["partition_id"]),
-                        "inserts": int(c["inserts"] or 0),
-                        "updates": int(c["updates"] or 0),
-                        "deletes": int(c["deletes"] or 0),
-                        "noops": int(c["noops"] or 0),
-                        "wall_ms": result.wall_ms,
-                    }
-                    for c in result.partition_counters
-                ]
+            runner.apply_slice(
+                cached, start_lsn, end_lsn, batch_id,
+                ledger_extra={"stream_epoch": epoch_id},
             )
             applied["epochs"] += 1
             applied["events"] += n
             for r in rollups or []:
                 r.refresh()
-            # same metadata-retention policy as the batch runner
-            # (IngestConfig knobs are surface-agnostic): bounded live
-            # manifests + reclaimed files + compacted ledger across
-            # unbounded streaming ingest
-            ev = config.expire_every_n_batches
-            if ev and applied["epochs"] % ev == 0:
-                from gene_etl_spark.lake.maintenance import (
-                    expire_snapshots,
-                    prune_tombstones,
-                    vacuum,
-                )
-
-                expire_snapshots(table, keep_last=config.expire_keep_last)
-                vacuum(table, older_than_sec=config.vacuum_grace_sec)
-                retain = config.tombstone_retention_lsns
-                prune_tombstones(
-                    table,
-                    before_lsn=(
-                        None
-                        if retain is None
-                        else ledger.max_committed_end_lsn() - retain
-                    ),
-                )
-            if config.ledger_compact_min_loose is not None:
-                ledger.compact_if_needed(
-                    min_loose=config.ledger_compact_min_loose
-                )
+            runner.maintain()
+        except Exception as e:
+            failures.append(e)  # re-raised as itself once the query stops
+            raise
         finally:
             cached.unpersist()
 
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(runner.source.schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = (
@@ -282,7 +173,12 @@ def ingest_stream(
         .start()
     )
     t0 = time.time()
-    query.awaitTermination(timeout_sec)
+    try:
+        query.awaitTermination(timeout_sec)
+    except Exception:
+        if failures:
+            raise failures[-1] from None
+        raise
     if query.isActive:
         query.stop()
     return {

@@ -75,8 +75,8 @@ class Validator:
         ``DataFrame.observe`` — the fused fast path: metrics ride the
         dedup job's own pass over the slice (zero extra scan), and the
         hard gate fires on them before anything is written. countDistinct
-        is not observable, so the soft lsn-uniqueness check belongs to
-        the strict path only (``pre_check_counters``)."""
+        is not observable, so the soft lsn-uniqueness check is left to an
+        explicit ``pre_checks`` audit pass."""
         null_key = None
         for k in key_cols:
             c = F.col(k).isNull()
@@ -98,7 +98,7 @@ class Validator:
         batch_id: str,
     ) -> list[dict]:
         """Gate on the observed sums (identical hard checks and
-        identical raise semantics as the two-pass path; runs before any
+        identical raise semantics as ``pre_checks``; runs before any
         lake file is written)."""
         agg = {k: int(metrics.get(k) or 0) for k in
                ("events_read", "null_keys", "bad_ops", "oob_lsn")}

@@ -37,9 +37,11 @@ def main() -> None:
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--num-buckets", type=int, default=64)
     ap.add_argument("--slice-width", type=int, default=1_000_000)
-    ap.add_argument("--num-salts", type=int, default=8)
     ap.add_argument("--merge-mode", choices=["cow", "mor"], default="cow")
-    ap.add_argument("--compact-every", type=int, default=None)
+    ap.add_argument(
+        "--compact-delta-files", type=int, default=None,
+        help="MoR: compact any bucket holding more than this many delta files",
+    )
     ap.add_argument("--max-batches", type=int, default=None)
     ap.add_argument("--streaming", action="store_true")
     ap.add_argument("--cores", type=int, default=None, help="local mode only")
@@ -56,9 +58,8 @@ def main() -> None:
         validation_path=os.path.join(args.warehouse, "validation_log"),
         num_buckets=args.num_buckets,
         slice_lsn_width=args.slice_width,
-        num_salts=args.num_salts,
         merge_mode=args.merge_mode,
-        compact_every_n_batches=args.compact_every,
+        compact_delta_files_per_bucket=args.compact_delta_files,
         max_batches=args.max_batches,
     )
     spark = get_spark(app_name="cdc-ingest", cores=args.cores)

@@ -23,8 +23,6 @@ def _cfg(base, **kw):
         validation_path=os.path.join(base, "validation"),
         num_buckets=8,
         slice_lsn_width=750,
-        num_salts=2,
-        salt_threshold=0,
     )
     d.update(kw)
     return IngestConfig(**d)

@@ -56,8 +56,6 @@ def test_jsonl_binlog_replays_to_oracle_state(spark, workdir):
         validation_path=os.path.join(workdir, "validation"),
         num_buckets=8,
         slice_lsn_width=750,
-        num_salts=2,
-        salt_threshold=0,
         source_format="jsonl",
         source_schema_json=BINLOG_SCHEMA.json(),
     )

@@ -26,7 +26,7 @@ def _build(spark, workdir, n_events=3000, slice_width=750):
         ledger_path=os.path.join(workdir, "ledger"),
         metrics_path=os.path.join(workdir, "metrics"),
         validation_path=os.path.join(workdir, "validation"),
-        num_buckets=8, slice_lsn_width=slice_width, num_salts=2, salt_threshold=0,
+        num_buckets=8, slice_lsn_width=slice_width,
     )
     runner = CdcIngestRunner(spark, cfg)
     runner.run()

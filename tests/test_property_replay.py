@@ -77,8 +77,6 @@ def test_replay_equality_property(
             num_buckets=4,
             slice_lsn_width=max(1, info["n_events"] // n_slices),
             merge_mode=mode,
-            num_salts=2,
-            salt_threshold=0,
         )
         runner = CdcIngestRunner(spark, cfg)
         runner.run()

@@ -25,7 +25,7 @@ def test_rebucket_mid_stream(spark, workdir, mode):
         ledger_path=os.path.join(workdir, "ledger"),
         metrics_path=os.path.join(workdir, "metrics"),
         validation_path=os.path.join(workdir, "validation"),
-        num_buckets=4, slice_lsn_width=750, num_salts=2, salt_threshold=0,
+        num_buckets=4, slice_lsn_width=750,
         merge_mode=mode,
     )
     runner = CdcIngestRunner(spark, cfg)

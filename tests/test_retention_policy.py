@@ -28,7 +28,6 @@ def _cfg(workdir, **kw):
         metrics_path=os.path.join(workdir, "metrics"),
         validation_path=os.path.join(workdir, "validation"),
         num_buckets=4,
-        num_salts=2,
     )
     base.update(kw)
     return IngestConfig(**base)
@@ -107,6 +106,32 @@ def test_retention_policy_200_batches(spark, workdir):
     # per-batch fencing stays cheap: the committed-batch map is served
     # from the incremental fence cache without loading expired pieces
     assert len(runner2.table.committed_batches()) >= 220
+
+
+def test_retention_cadence_counts_batches_across_runs(spark, workdir, monkeypatch):
+    """The expiry cadence counts the table's committed batches, not the
+    batches of one call: two ``run(max_batches=1)`` calls with
+    ``expire_every_n_batches=2`` expire exactly once."""
+    from gene_etl_spark.lake import maintenance
+
+    generate_change_stream(
+        os.path.join(workdir, "events"), n_convs=10, max_turns=6,
+        n_events=200, seed=5, n_tranches=2,
+    )
+    cfg = _cfg(workdir, slice_lsn_width=50, expire_every_n_batches=2,
+               expire_keep_last=1)
+    expired = []
+    orig = maintenance.expire_snapshots
+
+    def counting(table, **kw):
+        expired.append(table.version)
+        return orig(table, **kw)
+
+    monkeypatch.setattr(maintenance, "expire_snapshots", counting)
+    CdcIngestRunner(spark, cfg).run(max_batches=1)
+    assert expired == []
+    CdcIngestRunner(spark, cfg).run(max_batches=1)
+    assert expired == [2]
 
 
 def test_retention_respects_tag_pins(spark, workdir):

@@ -35,8 +35,6 @@ def _cfg(workdir):
         metrics_path=os.path.join(workdir, "metrics"),
         validation_path=os.path.join(workdir, "validation"),
         num_buckets=8,
-        num_salts=4,
-        salt_threshold=0,
     )
 
 

@@ -90,7 +90,6 @@ def test_stream_epochs_interleaved_with_maintenance(spark, workdir, plan):
         metrics_path=os.path.join(workdir, "metrics"),
         validation_path=os.path.join(workdir, "validation"),
         num_buckets=4,
-        num_salts=2,
     )
     ckpt = os.path.join(workdir, "ckpt")
     inj = MaintenanceInjector(spark, cfg.lake_path, plan)

@@ -26,8 +26,6 @@ def test_streaming_ingest_equals_oracle(spark, workdir):
         metrics_path=os.path.join(workdir, "metrics"),
         validation_path=os.path.join(workdir, "validation"),
         num_buckets=8,
-        num_salts=4,
-        salt_threshold=0,
     )
     ckpt = os.path.join(workdir, "ckpt")
     summary = ingest_stream(spark, cfg, ckpt, max_files_per_trigger=2)
@@ -102,6 +100,53 @@ def test_binlog_source_sees_appended_tranches(spark, workdir):
     hi = src.max_lsn()
     got = src.read_slice(first_max, hi).count()
     assert got == t.num_rows
+
+
+def test_streaming_pre_gate_rejects_bad_ops_before_any_write(spark, workdir):
+    """A streaming epoch passes the batch runner's hard pre-gate: an
+    ``op='X'`` event raises ValidationError, and the lake stays at its
+    prior version with no new data file."""
+    import datetime as dt
+
+    import pyspark.sql.types as T
+
+    from gene_etl_spark.lake.table import LakeTable
+    from gene_etl_spark.validate import ValidationError
+
+    schema = T.StructType(
+        [
+            T.StructField("lsn", T.LongType()),
+            T.StructField("op", T.StringType()),
+            T.StructField("conv_id", T.StringType()),
+            T.StructField("turn_idx", T.IntegerType()),
+            T.StructField("role", T.StringType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("event_ts", T.TimestampType()),
+        ]
+    )
+    t = dt.datetime(2024, 1, 1)
+    rows = [
+        (1, "U", "c0", 0, "user", "hi", t, t),
+        (2, "X", "c0", 1, "user", "bad", t, t),  # invalid op
+    ]
+    ev_dir = os.path.join(workdir, "events")
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(ev_dir)
+    cfg = IngestConfig(
+        lake_path=os.path.join(workdir, "lake"),
+        events_path=ev_dir,
+        ledger_path=os.path.join(workdir, "ledger"),
+        metrics_path=os.path.join(workdir, "metrics"),
+        validation_path=os.path.join(workdir, "validation"),
+        num_buckets=8,
+    )
+    with pytest.raises(ValidationError, match="valid_ops"):
+        ingest_stream(spark, cfg, os.path.join(workdir, "ckpt"))
+    assert LakeTable.load(spark, cfg.lake_path).version == 0
+    files = []
+    for _root, _d, fs in os.walk(os.path.join(cfg.lake_path, "data")):
+        files += [f for f in fs if f.endswith(".parquet")]
+    assert files == []
 
 
 # two-tier test policy (round 7): this module is in the smoke tier

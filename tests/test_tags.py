@@ -36,7 +36,7 @@ def _build(spark, workdir, mode="cow"):
         ledger_path=os.path.join(workdir, "ledger"),
         metrics_path=os.path.join(workdir, "metrics"),
         validation_path=os.path.join(workdir, "validation"),
-        num_buckets=8, slice_lsn_width=750, num_salts=2, salt_threshold=0,
+        num_buckets=8, slice_lsn_width=750,
         merge_mode=mode,
     )
     runner = CdcIngestRunner(spark, cfg)

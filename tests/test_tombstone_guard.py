@@ -202,7 +202,6 @@ def test_stream_out_of_order_file_delivery(spark, tmp_path):
         metrics_path=os.path.join(wd, "metrics"),
         validation_path=os.path.join(wd, "validation"),
         num_buckets=4,
-        num_salts=2,
     )
     out = ingest_stream(
         spark, cfg, os.path.join(wd, "ckpt"), max_files_per_trigger=1

@@ -155,7 +155,7 @@ def test_stream_wap_failed_audit_quarantines_epoch(spark, events):
 
     cfg = _cfg(events, "s-reject", wap_audit=True)
     ckpt = f"{events}/ckpt-s-reject"
-    with pytest.raises(Exception):  # StreamingQueryException wraps the gate
+    with pytest.raises(ValidationError):  # the failed audit, as raised
         ingest_stream(
             spark,
             cfg,
