@@ -34,25 +34,20 @@ def _mor_commit_changes(
     parent-state row as ``UP`` (update/delete preimage) — computed by a
     bucket-pruned read of the parent restricted to the delta's keys, so
     preimage cost ∝ the commit's footprint, never the table."""
-    prev_deltas = parent.get("deltas", {}) or {}
-    cur_deltas = m.get("deltas", {}) or {}
-    cur_pieces = m.get("pieces") or {}
+    # identical content-addressed piece pointers prove a bucket's delta
+    # set is unchanged — only changed buckets' pieces are loaded, so
+    # reading ONE commit's changes costs its own footprint, not a walk
+    # of the table's file inventory
     prev_pieces = parent.get("pieces") or {}
-    if cur_pieces and prev_pieces:
-        # format-2 fast path: identical content-addressed piece pointers
-        # prove a bucket's delta set is unchanged — only changed buckets'
-        # pieces are loaded, so reading ONE commit's changes costs its
-        # own footprint, not a walk of the table's file inventory
-        candidates = [
-            b
-            for b, ent in cur_pieces.items()
-            if "d" in ent[1] and prev_pieces.get(b) != ent
-        ]
-    else:
-        candidates = list(cur_deltas)
+    candidates = [
+        b
+        for b, ptr in m["pieces"].items()
+        if "d" in ptr[1] and prev_pieces.get(b) != ptr
+    ]
+    prev_deltas = parent.get("deltas") or {}
     prev = {f for b in candidates for f in prev_deltas.get(b, [])}
     added_by_bucket = {
-        b: [f for f in cur_deltas.get(b, []) if f not in prev] for b in candidates
+        b: [f for f in m["deltas"][b] if f not in prev] for b in candidates
     }
     added = [f for fs in added_by_bucket.values() for f in fs]
     if not added:

@@ -33,7 +33,7 @@ def read_at_version(
     """Time-travel scan of snapshot ``version`` (MoR deltas of that
     snapshot resolve exactly as a live read would). ``where`` gets the
     same column-metrics file skipping as a live ``read(where=...)`` —
-    the historical manifest carries its own col_stats pieces."""
+    the historical manifest carries its own file entries."""
     return table.read(manifest=table._read_manifest(version), where=where)
 
 
@@ -364,6 +364,12 @@ def _clustered_write(
     out.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(abs_commit)
 
 
+def _entry_bytes(table: LakeTable, entries) -> int:
+    """On-disk bytes of the entries' files (a sized rewrite's input)."""
+    paths = (os.path.join(table.path, e["path"]) for e in entries)
+    return sum(os.path.getsize(p) for p in paths if os.path.exists(p))
+
+
 def compact(
     table: LakeTable,
     max_files_per_bucket: int = 1,
@@ -406,7 +412,7 @@ def compact(
     pass over the fragmented buckets (the quantile sketch)."""
     _validate_cluster(cluster, sort_cols)
     manifest = table.manifest
-    deltas = manifest.get("deltas", {}) or {}
+    entries = manifest["entries"]
     if buckets is not None:
         fragmented = sorted(set(buckets))
     else:
@@ -416,7 +422,7 @@ def compact(
                 for b, files in manifest["files"].items()
                 if len(files) > max_files_per_bucket
             }
-            | {int(b) for b, files in deltas.items() if files}
+            | {int(b) for b in manifest["deltas"]}
         )
     if not fragmented:
         return {"compacted_buckets": 0, "snapshot_version": manifest["version"]}
@@ -429,54 +435,26 @@ def compact(
     abs_commit = os.path.join(table.path, rel_commit)
     in_bytes = None
     if target_file_size_bytes:
-        files_map = manifest.get("files", {}) or {}
-        in_bytes = sum(
-            os.path.getsize(os.path.join(table.path, rel))
-            for b in fragmented
-            for rel in list(files_map.get(str(b), []) or [])
-            + list(deltas.get(str(b), []) or [])
-            if os.path.exists(os.path.join(table.path, rel))
+        in_bytes = _entry_bytes(
+            table, (e for b in fragmented for e in entries.get(str(b), []))
         )
     _clustered_write(
         df, abs_commit, len(fragmented), in_bytes,
         target_file_size_bytes, sort_cols, cluster, zorder_bits,
         table.key_cols[0],
     )
-    # overlays over the parent's lazy maps (compaction rides the ingest
-    # loop via the threshold policy — it must not pay O(table) metadata):
-    # rewritten buckets update, their deltas fold, the rest pointer-copies
-    from gene_etl_spark.lake.table import LSN_COL, _Overlay
-
-    bucket_files = table._list_bucket_files(abs_commit, rel_commit)
-    new_files = _Overlay(
-        manifest.get("files", {}) or {},
-        {str(b): bucket_files.get(str(b), []) for b in fragmented},
-    )
-    new_deltas = _Overlay(deltas, removed=[str(b) for b in fragmented])
-    stats_cols = [
-        c
-        for c in (manifest.get("stats_cols") or [])
-        if c not in (table.key_cols[0], LSN_COL)
-    ]
-    both = table._collect_file_stats_multi(
-        bucket_files, [table.key_cols[0], LSN_COL] + stats_cols,
-        null_counts_for=stats_cols,
-    )
-    new_stats = _Overlay(manifest.get("file_stats", {}) or {}, both[table.key_cols[0]])
-    new_lsn_stats = _Overlay(manifest.get("lsn_stats", {}) or {}, both[LSN_COL])
-    new_col_stats = _Overlay(
-        manifest.get("col_stats", {}) or {},
-        table._invert_col_stats(both, stats_cols),
-    )
+    # rewritten buckets' entries (base and delta) are replaced by the new
+    # files'; the rest stay lazy and pointer-copy (compaction rides the
+    # ingest loop via the threshold policy — it must not pay O(table)
+    # metadata)
+    added = table._file_entries(table._list_bucket_files(abs_commit, rel_commit))
     new_manifest = {
         **manifest,
         "version": version,
         "parent": manifest["version"],
-        "files": new_files,
-        "deltas": new_deltas,
-        "file_stats": new_stats,
-        "lsn_stats": new_lsn_stats,
-        "col_stats": new_col_stats,
+        "entries": entries.updated(
+            {str(b): added.get(str(b), []) for b in fragmented}
+        ),
         "properties": {},
         "summary": {
             "operation": "compact",
@@ -537,7 +515,6 @@ def rebucket(
         return {"rebucketed": False, "snapshot_version": manifest["version"]}
 
     from gene_etl_spark.functions import bucket_of
-    from gene_etl_spark.lake.table import LSN_COL
 
     df = table.read(include_meta=True).withColumn(
         BUCKET_COL, bucket_of(table.key_cols[0], new_num_buckets)
@@ -547,40 +524,23 @@ def rebucket(
     abs_commit = os.path.join(table.path, rel_commit)
     in_bytes = None
     if target_file_size_bytes:
-        files_map = manifest.get("files", {}) or {}
-        delta_map = manifest.get("deltas", {}) or {}
-        in_bytes = sum(
-            os.path.getsize(os.path.join(table.path, rel))
-            for m in (files_map, delta_map)
-            for b in m
-            for rel in (m[b] or [])
-            if os.path.exists(os.path.join(table.path, rel))
+        in_bytes = _entry_bytes(
+            table, (e for ents in manifest["entries"].values() for e in ents)
         )
     _clustered_write(
         df, abs_commit, new_num_buckets, in_bytes,
         target_file_size_bytes, sort_cols, cluster, zorder_bits,
         table.key_cols[0],
     )
-    bucket_files = table._list_bucket_files(abs_commit, rel_commit)
-    stats_cols = [
-        c
-        for c in (manifest.get("stats_cols") or [])
-        if c not in (table.key_cols[0], LSN_COL)
-    ]
-    both = table._collect_file_stats_multi(
-        bucket_files, [table.key_cols[0], LSN_COL] + stats_cols,
-        null_counts_for=stats_cols,
-    )
+    old_buckets = sorted(int(b) for b in manifest["entries"])
     new_manifest = {
         **manifest,
         "version": version,
         "parent": manifest["version"],
         "num_buckets": new_num_buckets,
-        "files": {b: fs for b, fs in bucket_files.items()},
-        "deltas": {},
-        "file_stats": both[table.key_cols[0]],
-        "lsn_stats": both[LSN_COL],
-        "col_stats": table._invert_col_stats(both, stats_cols),
+        "entries": table._file_entries(
+            table._list_bucket_files(abs_commit, rel_commit)
+        ),
         "properties": {},
         "summary": {
             "operation": "rebucket",
@@ -595,17 +555,10 @@ def rebucket(
             # rebucket rewrites everything: advertise the touched set so
             # a racing CoW loser's overlap check fires (the num_buckets
             # rebase guard is the primary fence; this is belt-and-braces)
-            "touched_buckets": sorted(
-                {int(b) for b in (manifest.get("files", {}) or {})}
-                | {int(b) for b in (manifest.get("deltas", {}) or {})}
-            ),
+            "touched_buckets": old_buckets,
         },
         "committed_at_ms": int(time.time() * 1000),
     }
-    old_buckets = sorted(
-        {int(b) for b in manifest.get("files", {})}
-        | {int(b) for b in (manifest.get("deltas", {}) or {})}
-    )
     committed = table.commit_with_rebase(new_manifest, old_buckets)
     return {
         "rebucketed": True,
@@ -629,7 +582,7 @@ def rollback(
     Metadata-only: the target's per-bucket content maps are re-linked
     (content-addressed pieces dedupe against the target's own), no data
     file is rewritten. ``touched`` = buckets whose piece pointers differ
-    between current and target (pointer compare, no I/O on format 2),
+    between current and target (pointer compare, no piece I/O),
     so a concurrent merge on a genuinely-changed bucket refuses via the
     normal rebase rules. Refused across a ``rebucket`` (the target's
     files are numbered under a different layout — rebucket again after
@@ -660,35 +613,15 @@ def rollback(
             f" current is {manifest.get('num_buckets')} — roll back by"
             " re-running rebucket against the restored state instead"
         )
-    raw_cur = table._read_manifest_raw(cur_v)
-    raw_t = table._read_manifest_raw(v_t)
-    pc, pt = raw_cur.get("pieces"), raw_t.get("pieces")
-    if pc is not None and pt is not None:
-        touched = sorted(
-            int(b) for b in set(pc) | set(pt) if pc.get(b) != pt.get(b)
-        )
-    else:  # format-1 fallback: compare the inline maps
-        fc = manifest.get("files", {}) or {}
-        dc = manifest.get("deltas", {}) or {}
-        ft = target.get("files", {}) or {}
-        dt_ = target.get("deltas", {}) or {}
-        touched = sorted(
-            int(b)
-            for b in set(fc) | set(ft) | set(dc) | set(dt_)
-            if list(fc.get(b, []) or []) != list(ft.get(b, []) or [])
-            or list(dc.get(b, []) or []) != list(dt_.get(b, []) or [])
-        )
+    pc, pt = manifest["pieces"], target["pieces"]
+    touched = sorted(int(b) for b in set(pc) | set(pt) if pc.get(b) != pt.get(b))
     if not touched:
         return {"rolled_back": False, "snapshot_version": cur_v}
     new_manifest = {
         **manifest,  # keeps the CURRENT schema (additive superset)
         "version": cur_v + 1,
         "parent": cur_v,
-        "files": target.get("files", {}) or {},
-        "deltas": target.get("deltas", {}) or {},
-        "file_stats": target.get("file_stats", {}) or {},
-        "lsn_stats": target.get("lsn_stats", {}) or {},
-        "col_stats": target.get("col_stats", {}) or {},
+        "entries": target["entries"],
         "properties": {"batch_id": f"rollback-v{v_t}-from-v{cur_v}"},
         "summary": {
             "operation": "rollback",
@@ -740,8 +673,11 @@ def compact_if_needed(
     spans the resulting compaction commits silently (no change rows —
     test-pinned)."""
     manifest = table.manifest
-    deltas = manifest.get("deltas", {}) or {}
-    target = {int(b) for b, files in deltas.items() if len(files) > max_delta_files}
+    target = {
+        int(b)
+        for b, files in manifest["deltas"].items()
+        if len(files) > max_delta_files
+    }
     if max_base_files is not None:
         target |= {
             int(b)
@@ -820,7 +756,7 @@ def vacuum(
     pinning = [
         os.path.join(mdir, fn)
         for fn in os.listdir(mdir)
-        if fn.endswith(".json") and not fn.endswith(".expired.json")
+        if re.fullmatch(r"v\d+\.json", fn)
     ]
     if os.path.isdir(sdir):  # unpublished WAP snapshots pin their files
         pinning += [
@@ -831,12 +767,10 @@ def vacuum(
     for path in pinning:
         with open(path) as f:
             m = table._inflate(json.load(f))
-        for rel, _flags in (m.get("pieces", {}) or {}).values():
+        for rel, _flags in m["pieces"].values():
             live_pieces.add(os.path.basename(rel))
-        for rels in (m.get("files", {}) or {}).values():
-            live.update(rels)
-        for rels in (m.get("deltas", {}) or {}).values():
-            live.update(rels)  # MoR delta files are live data
+        for ents in m["entries"].values():
+            live.update(e["path"] for e in ents)  # base and MoR delta files
     # piece GC: content-addressed piece files referenced by no live
     # snapshot (orphans of losing/crashed writers, or pinned only by
     # expired snapshots — whose metadata pins die with their data pins).

@@ -38,6 +38,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 BUCKET_COL = "bucket_id"
@@ -177,6 +178,20 @@ def _counters_agg(merged: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
+def _evolve_schema(table, updates: DataFrame, op_col: str, lsn_col: str):
+    """Additive schema evolution: payload columns of the update slice
+    that the table lacks extend its schema as nullable fields (old files
+    read them back as null). Returns (evolved schema, new fields)."""
+    schema = table.schema
+    known = {op_col, lsn_col, "event_ts", BUCKET_COL, *schema.fieldNames()}
+    new_fields = [
+        T.StructField(f.name, f.dataType, True)
+        for f in updates.schema.fields
+        if f.name not in known
+    ]
+    return T.StructType(list(schema.fields) + new_fields), new_fields
+
+
 @dataclass
 class MergeResult:
     snapshot_version: int
@@ -253,23 +268,7 @@ def merge_into(
     key_cols = table.key_cols
     num_buckets = table.num_buckets
 
-    # ---- schema evolution: additive columns from the update slice -------
-    table_schema = table.schema
-    table_cols = [f.name for f in table_schema.fields]
-    reserved = {op_col, lsn_col, "event_ts", BUCKET_COL}
-    upd_payload_cols = [c for c in updates.columns if c not in reserved]
-    new_fields = [
-        f for f in updates.schema.fields
-        if f.name in upd_payload_cols and f.name not in table_cols
-    ]
-    evolved_schema = table_schema
-    if new_fields:
-        import pyspark.sql.types as T
-
-        evolved_schema = T.StructType(
-            list(table_schema.fields)
-            + [T.StructField(f.name, f.dataType, True) for f in new_fields]
-        )
+    evolved_schema, new_fields = _evolve_schema(table, updates, op_col, lsn_col)
     payload_cols = [f.name for f in evolved_schema.fields]
 
     # ---- bucket the update slice; prune the target scan -----------------
@@ -313,7 +312,7 @@ def merge_into(
         if c in upd.columns:
             u_cols.append(F.col(c).alias(UP + c))
         else:  # update slice predates a column the table already has
-            u_cols.append(F.lit(None).cast(dict(zip(payload_cols, [f.dataType for f in evolved_schema.fields]))[c]).alias(UP + c))
+            u_cols.append(F.lit(None).cast(evolved_schema[c].dataType).alias(UP + c))
     u_side = upd.select(
         *u_cols,
         F.col(op_col).alias(UP + "op"),
@@ -395,39 +394,15 @@ def merge_into(
     upd.unpersist()
 
     # ---- commit the new snapshot ----------------------------------------
-    # overlays over the parent's (lazy) maps: untouched buckets are never
-    # materialized driver-side — _emit_raw pointer-copies their pieces,
-    # so commit metadata cost is ∝ the batch's write footprint even on a
-    # table with millions of files. A CoW rewrite resolves any MoR deltas
-    # for its buckets (the target read folds them in), so those delta
-    # pins are cleared; superseded files' stats are dropped at piece-
-    # write time (content is rebuilt per touched bucket from refs only).
-    from gene_etl_spark.lake.table import _Overlay
-
-    bucket_files = table._list_bucket_files(abs_commit, rel_commit)
-    new_files = _Overlay(
-        manifest.get("files", {}) or {},
-        {str(b): bucket_files.get(str(b), []) for b in touched},
-    )
-    new_deltas = _Overlay(
-        manifest.get("deltas", {}) or {}, removed=[str(b) for b in touched]
-    )
-    # per-file key + LSN bounds from one footer pass over the just-
-    # written files (point-lookup skipping + the fast MoR resolve proof)
-    stats_cols = [
-        c
-        for c in (manifest.get("stats_cols") or [])
-        if c not in (key_cols[0], LSN_COL)
-    ]
-    both = table._collect_file_stats_multi(
-        bucket_files, [key_cols[0], LSN_COL] + stats_cols,
-        null_counts_for=stats_cols,
-    )
-    new_stats = _Overlay(manifest.get("file_stats", {}) or {}, both[key_cols[0]])
-    new_lsn_stats = _Overlay(manifest.get("lsn_stats", {}) or {}, both[LSN_COL])
-    new_col_stats = _Overlay(
-        manifest.get("col_stats", {}) or {},
-        table._invert_col_stats(both, stats_cols),
+    # the touched buckets' entries are replaced by the just-written files'
+    # (one footer pass: key, LSN and stats_cols bounds); a CoW rewrite
+    # resolves any MoR deltas for its buckets (the target read folds them
+    # in), so their delta entries go too. Untouched buckets stay lazy and
+    # _emit_raw pointer-copies their pieces: commit metadata cost is ∝
+    # the batch's write footprint even on a table with millions of files.
+    added = table._file_entries(table._list_bucket_files(abs_commit, rel_commit))
+    entries = manifest["entries"].updated(
+        {str(b): added.get(str(b), []) for b in touched}
     )
 
     res = MergeResult(snapshot_version=version, touched_buckets=touched)
@@ -455,11 +430,7 @@ def merge_into(
         "key_cols": key_cols,
         "num_buckets": num_buckets,
         "stats_cols": list(manifest.get("stats_cols") or []),
-        "files": new_files,
-        "deltas": new_deltas,
-        "file_stats": new_stats,
-        "lsn_stats": new_lsn_stats,
-        "col_stats": new_col_stats,
+        "entries": entries,
         "properties": {
             "batch_id": batch_id,
             "start_lsn": start_lsn,
@@ -509,7 +480,7 @@ def _merge_mor(
     cannot compare against a tombstone it already erased."""
     import json as _json
 
-    from gene_etl_spark.lake.table import LSN_COL, OP_COL
+    from gene_etl_spark.lake.table import DELTA, LSN_COL, OP_COL
 
     t0 = time.time()
     # current manifest, not the handle's cache — see the CoW path's note
@@ -518,23 +489,7 @@ def _merge_mor(
     key_cols = table.key_cols
     timings: dict[str, float] = {}
 
-    # additive schema evolution, same as CoW
-    table_schema = table.schema
-    table_cols = [f.name for f in table_schema.fields]
-    reserved = {op_col, lsn_col, "event_ts", BUCKET_COL}
-    upd_payload_cols = [c for c in updates.columns if c not in reserved]
-    new_fields = [
-        f for f in updates.schema.fields
-        if f.name in upd_payload_cols and f.name not in table_cols
-    ]
-    evolved_schema = table_schema
-    if new_fields:
-        import pyspark.sql.types as T
-
-        evolved_schema = T.StructType(
-            list(table_schema.fields)
-            + [T.StructField(f.name, f.dataType, True) for f in new_fields]
-        )
+    evolved_schema, _ = _evolve_schema(table, updates, op_col, lsn_col)
     payload_cols = [f.name for f in evolved_schema.fields]
 
     tp = time.time()
@@ -622,26 +577,17 @@ def _merge_mor(
         )
     upd.unpersist()
 
-    # overlay over the parent's (lazy) delta map: only the touched
-    # buckets' pieces load (to append to their existing delta lists);
-    # everything else pointer-copies at _emit_raw — the MoR commit's
-    # driver-side metadata cost is ∝ the slice, like its write volume
-    from gene_etl_spark.lake.table import _Overlay
-
-    bucket_files = table._list_bucket_files(abs_commit, rel_commit)
-    parent_deltas = manifest.get("deltas", {}) or {}
-    new_deltas = _Overlay(
-        parent_deltas,
-        {
-            str(b): list(parent_deltas.get(str(b), [])) + bucket_files.get(str(b), [])
-            for b in touched
-        },
+    # the new delta entries (LSN bounds: they prove delta/base
+    # disjointness for the fast resolve) are appended to the touched
+    # buckets' entries; only those buckets' pieces load, the rest
+    # pointer-copy at _emit_raw — the MoR commit's driver-side metadata
+    # cost is ∝ the slice, like its write volume
+    added = table._file_entries(
+        table._list_bucket_files(abs_commit, rel_commit), DELTA
     )
-    # delta-file LSN bounds: prove delta/base disjointness so reads can
-    # take the anti-join fast path instead of the full LWW aggregate
-    new_lsn_stats = _Overlay(
-        manifest.get("lsn_stats", {}) or {},
-        table._collect_file_stats(bucket_files, column=LSN_COL),
+    parent = manifest["entries"]
+    entries = parent.updated(
+        {str(b): parent.get(str(b), []) + added.get(str(b), []) for b in touched}
     )
 
     res = MergeResult(snapshot_version=version, touched_buckets=touched)
@@ -664,14 +610,7 @@ def _merge_mor(
         "key_cols": key_cols,
         "num_buckets": table.num_buckets,
         "stats_cols": list(manifest.get("stats_cols") or []),
-        "files": manifest.get("files", {}) or {},  # base untouched (lazy)
-        "deltas": new_deltas,
-        "file_stats": manifest.get("file_stats", {}) or {},  # untouched (lazy)
-        "lsn_stats": new_lsn_stats,
-        # deltas carry no col_stats on purpose: a delta-carrying bucket is
-        # never file-pruned (resolution precedes filtering), so bounds on
-        # delta files would never be consulted
-        "col_stats": manifest.get("col_stats", {}) or {},  # untouched (lazy)
+        "entries": entries,
         "properties": {
             "batch_id": batch_id,
             "start_lsn": start_lsn,

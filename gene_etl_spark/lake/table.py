@@ -16,6 +16,10 @@ rule needs (SURVEY.md §7.4 fallback design):
   transform analogue). MERGE rewrites only the buckets touched by a batch
   — cost scales with the update slice, not the table (the partition-
   pruning property that makes copy-on-write viable at 100 TB).
+- **One entry per data file**: each snapshot lists, per bucket, one
+  entry per data file — path, base or delta, key/LSN/column bounds
+  (Iceberg's manifest-entry shape) — in content-addressed piece files;
+  writers add and remove entries, so stats cannot drift from files.
 - **Additive schema evolution**: the manifest owns the schema; new
   payload columns appearing in an update slice extend it, and old data
   files (which physically lack the column) read back as nulls via the
@@ -56,9 +60,9 @@ DATA_DIR = "data"
 LSN_COL = "_lsn"  # hidden per-row last-writer LSN, enables cross-batch LWW
 OP_COL = "_op"  # delta files only: I/U/D (tombstones live in deltas)
 
-# manifest fields that live in per-bucket piece files (format 2)
-_PIECE_FIELDS = ("files", "deltas", "file_stats", "lsn_stats", "col_stats")
-_BUCKET_OF_REL = re.compile(r"(?:^|/)bucket_id=([^/]+)/")
+# v{N}.json holds a bucket -> [piece, flags] pointer map; each piece
+# holds that bucket's file entries (see _BucketEntries)
+MANIFEST_FORMAT = 3
 
 # predicate vocabulary for read(where=...) data skipping
 _WHERE_OPS = (
@@ -122,8 +126,8 @@ def _truncate_string_bounds(lo, hi):
 
 
 def _file_footer_stats(abs_path, columns, with_nulls):
-    """One parquet footer → per-column bounds entries (the body of
-    ``_collect_file_stats_multi``, module-level so the distributed
+    """One parquet footer → per-column bounds (the body of
+    ``LakeTable._file_entries``, module-level so the distributed
     collection path can ship it to executors). Returns {col: entry}
     where entry is ``[lo, hi]`` or the extended ``[lo, hi, null_count,
     num_rows]`` for ``with_nulls`` columns; stats are an optimization,
@@ -267,118 +271,83 @@ def _where_to_column(where) -> F.Column:
     return cond
 
 
-class _PieceView(Mapping):
-    """Read-only view of one piece-backed manifest field.
-
-    Format-2 manifests store per-bucket metadata (file lists + per-file
-    stats) in immutable content-addressed piece files; the snapshot
-    manifest itself holds only a bucket -> piece pointer map. This view
-    reconstructs the format-1 inline mapping LAZILY: key enumeration for
-    ``files``/``deltas`` comes from the pointer flags (no I/O), and a
-    ``__getitem__`` loads exactly the one piece that owns the key — so a
-    bucket-pruned read or point lookup touches one piece, never the
-    table's whole file inventory. Stats fields are keyed by relative
-    file path; the owning bucket is parsed from the path's
-    ``bucket_id=`` component (every data file is written via
-    ``partitionBy(bucket_id)``). Full iteration (a CoW commit's
-    carry-forward copy) loads each piece once, amortized by the table's
-    piece cache. Accessing a piece that vacuum reclaimed (possible only
-    via an EXPIRED snapshot's manifest) raises FileNotFoundError — the
-    same contract as its vacuumed data files.
-    """
-
-    __slots__ = ("_tbl", "_pieces", "_field")
-
-    def __init__(self, tbl: "LakeTable", pieces: dict, field: str):
-        self._tbl = tbl
-        self._pieces = pieces
-        self._field = field
-
-    def _bucket_keys(self):
-        flag = self._field[0]  # 'f' / 'd'
-        return [b for b, ent in self._pieces.items() if flag in ent[1]]
-
-    def __iter__(self):
-        if self._field in ("files", "deltas"):
-            yield from self._bucket_keys()
-        else:
-            for b in self._pieces:
-                yield from self._tbl._load_piece(self._pieces[b][0]).get(
-                    self._field, {}
-                )
-
-    def __len__(self):
-        if self._field in ("files", "deltas"):
-            return len(self._bucket_keys())
-        return sum(1 for _ in self)
-
-    def __bool__(self):
-        # cheap truthiness: never force a full piece load just to pass
-        # an ``or {}`` guard (stats views report truthy whenever pieces
-        # exist; emptiness then resolves per-key, which is lazy)
-        if self._field in ("files", "deltas"):
-            return bool(self._bucket_keys())
-        return bool(self._pieces)
-
-    def __getitem__(self, key):
-        if self._field in ("files", "deltas"):
-            ent = self._pieces.get(key)
-            if ent is None or self._field[0] not in ent[1]:
-                raise KeyError(key)
-            return self._tbl._load_piece(ent[0]).get(self._field, [])
-        m = _BUCKET_OF_REL.search(key)
-        if m and m.group(1) in self._pieces:
-            piece = self._tbl._load_piece(self._pieces[m.group(1)][0])
-            return piece.get(self._field, {})[key]
-        for b in self._pieces:  # path without a bucket component: scan
-            piece = self._tbl._load_piece(self._pieces[b][0])
-            if key in piece.get(self._field, {}):
-                return piece[self._field][key]
-        raise KeyError(key)
-
-
 class CommitConflict(RuntimeError):
     """Another writer committed the same snapshot version first."""
 
 
-class _Overlay(Mapping):
-    """Copy-on-write mapping: per-bucket updates/removals layered over a
-    base mapping (usually a lazy ``_PieceView``) WITHOUT materializing it.
+# content of a file entry, and the pointer flag that advertises it
+BASE, DELTA = "base", "delta"
+_FLAG = {BASE: "f", DELTA: "d"}
 
-    This is what keeps a commit's driver-side metadata cost ∝ its write
-    footprint: merge/compact build their new manifest maps as overlays,
-    so only the touched buckets' pieces are ever loaded — ``_emit_raw``
-    pointer-copies the untouched rest straight from the parent manifest.
-    Key enumeration stays I/O-free when the base's is (piece flags)."""
 
-    __slots__ = ("_base", "_updates", "_removed")
+def _flags(entries) -> str:
+    return "".join(f for c, f in _FLAG.items() if any(e["content"] == c for e in entries))
 
-    def __init__(self, base, updates: dict | None = None, removed=()):
-        self._base = base if base is not None else {}
+
+class _BucketEntries(Mapping):
+    """bucket -> [file entry] of one snapshot, the manifest's single
+    per-file record (Iceberg's manifest-entry shape): each entry is
+    ``{path, content: base|delta, key: [lo, hi], lsn: [lo, hi], cols:
+    {col: bounds}}``, with a bound absent when the footer had none.
+
+    Lazy over the snapshot's piece pointer map: key enumeration and
+    membership come from the pointer flags (no I/O) and ``[bucket]``
+    loads exactly that bucket's piece, so a bucket-pruned read or point
+    lookup touches one piece, never the table's file inventory.
+    ``updated`` layers a writer's per-bucket replacements over the same
+    pointers (an empty list removes the bucket) without loading the
+    rest — ``_emit_raw`` then pointer-copies every untouched bucket, so
+    commit metadata cost is ∝ the write footprint. ``content`` narrows
+    the view to one kind's paths: the read-only ``files``/``deltas``
+    projections. Loading a piece that vacuum reclaimed (possible only
+    via an EXPIRED snapshot) raises FileNotFoundError, like its data
+    files."""
+
+    __slots__ = ("_tbl", "_pieces", "_updates", "_content")
+
+    def __init__(self, tbl, pieces: dict, updates=None, content=None):
+        self._tbl = tbl
+        self._pieces = pieces
         self._updates = dict(updates or {})
-        self._removed = set(removed) - set(self._updates)
+        self._content = content
 
-    def __getitem__(self, key):
-        if key in self._updates:
-            return self._updates[key]
-        if key in self._removed:
-            raise KeyError(key)
-        return self._base[key]
+    def updated(self, updates: dict) -> "_BucketEntries":
+        return _BucketEntries(self._tbl, self._pieces, {**self._updates, **updates})
+
+    def paths(self, content: str) -> "_BucketEntries":
+        return _BucketEntries(self._tbl, self._pieces, self._updates, content)
+
+    def _bucket_flags(self, b) -> str:
+        if b in self._updates:
+            return _flags(self._updates[b])
+        ptr = self._pieces.get(b)
+        return ptr[1] if ptr else ""
+
+    def __contains__(self, b):
+        flags = self._bucket_flags(b)
+        return _FLAG[self._content] in flags if self._content else bool(flags)
 
     def __iter__(self):
-        yield from self._updates
-        for k in self._base:
-            if k not in self._updates and k not in self._removed:
-                yield k
+        for b in self._pieces:
+            if b not in self._updates and b in self:
+                yield b
+        for b in self._updates:
+            if b in self:
+                yield b
 
     def __len__(self):
         return sum(1 for _ in self)
 
-    def __bool__(self):
-        # cheap: defer to the base's (piece views are flag-based); a
-        # truthy-but-empty corner (all base keys removed) is tolerated,
-        # consumers treat empty-and-falsy identically via .get()
-        return bool(self._updates) or bool(self._base)
+    def __getitem__(self, b):
+        if b not in self:
+            raise KeyError(b)
+        if b in self._updates:
+            ents = self._updates[b]
+        else:
+            ents = self._tbl._load_piece(self._pieces[b][0])["entries"]
+        if self._content is None:
+            return ents
+        return [e["path"] for e in ents if e["content"] == self._content]
 
 
 _MISSING = object()  # cache sentinel: "not looked up yet" vs "no stats"
@@ -429,11 +398,11 @@ class LakeTable:
             "schema": json.loads(schema.json()),
             "key_cols": list(key_cols),
             "num_buckets": int(num_buckets),
-            # payload columns whose per-file [min, max] bounds every
-            # CoW/compact/rebucket commit persists (Iceberg column-metrics
-            # analogue) — read(where=...) skips files these bounds refute
+            # payload columns whose per-file [min, max] bounds every base
+            # file entry carries (Iceberg column-metrics analogue) —
+            # read(where=...) skips files these bounds refute
             "stats_cols": list(stats_cols or []),
-            "files": {},  # bucket(str) -> [relative file paths]
+            "entries": {},  # bucket(str) -> [file entry]
             "properties": {},
             "summary": {"operation": "create", "total_rows": 0},
             "committed_at_ms": int(time.time() * 1000),
@@ -523,15 +492,22 @@ class LakeTable:
         return self._inflate(self._read_manifest_raw(version))
 
     def _inflate(self, raw: dict) -> dict:
-        """Present a manifest in the inline (format-1) shape consumers
-        use. Format-2 manifests get lazy ``_PieceView``s over their
-        piece pointer map — O(1), no piece I/O until a field is read."""
-        if "pieces" not in raw:
-            return raw
-        out = dict(raw)
-        for field in _PIECE_FIELDS:
-            out[field] = _PieceView(self, raw["pieces"], field)
-        return out
+        """A raw manifest plus its lazy ``entries`` view and the
+        read-only ``files``/``deltas`` (bucket -> paths) projections —
+        O(1), no piece I/O until a bucket is read."""
+        if raw.get("format") != MANIFEST_FORMAT:
+            raise ValueError(
+                f"manifest v{raw.get('version')} at {self.path} has format"
+                f" {raw.get('format')!r}; this engine reads format"
+                f" {MANIFEST_FORMAT} only"
+            )
+        entries = _BucketEntries(self, raw["pieces"])
+        return {
+            **raw,
+            "entries": entries,
+            "files": entries.paths(BASE),
+            "deltas": entries.paths(DELTA),
+        }
 
     def _load_piece(self, rel: str) -> dict:
         """Piece files are immutable and content-addressed, so the cache
@@ -571,15 +547,13 @@ class LakeTable:
           our buckets (our rewritten files were derived from the base we
           read); bucket overlap → raise.
 
-        The passed ``manifest`` must carry OUR ``files``/``deltas``
-        entries for ``touched_buckets`` (they are re-layered verbatim).
+        The passed ``manifest`` must carry OUR entries for
+        ``touched_buckets``: a CoW rewrite's replace the winner's, an
+        append's new delta entries are added to the winner's.
         """
-        ours_files = {str(b): manifest["files"].get(str(b), []) for b in touched_buckets}
-        ours_deltas = {
-            str(b): (manifest.get("deltas", {}) or {}).get(str(b), [])
-            for b in touched_buckets
-        }
-        touched_set = {str(b) for b in touched_buckets}
+        ours = {str(b): list(manifest["entries"].get(str(b), [])) for b in touched_buckets}
+        added = None  # an append's own entries, computed on first conflict
+        touched_set = set(ours)
         attempt = dict(manifest)
         for _ in range(max_retries + 1):
             try:
@@ -594,17 +568,18 @@ class LakeTable:
                 # losing that race means EVERY existing commit is a
                 # winner to check against (an empty winners list here
                 # would skip both safety checks and rebase blindly).
-                # Targeted loads (live or expired), not history(): the
-                # winner set is (parent, latest], a handful of commits —
-                # never re-open the whole chain inside a conflict retry.
-                winners = []
-                for v in range(
-                    0 if base_version is None else base_version + 1,
-                    latest["version"] + 1,
-                ):
-                    raw = self._read_raw_any(v)
-                    if raw is not None:
-                        winners.append(self._inflate(raw))
+                # Targeted raw loads (live or expired), not history():
+                # the winner set is (parent, latest], a handful of
+                # commits — never re-open the whole chain inside a
+                # conflict retry. Only properties/summary are read.
+                winners = [
+                    raw
+                    for v in range(
+                        0 if base_version is None else base_version + 1,
+                        latest["version"] + 1,
+                    )
+                    if (raw := self._read_raw_any(v)) is not None
+                ]
                 if batch_id and any(
                     (m.get("properties") or {}).get("batch_id") == batch_id
                     for m in winners
@@ -614,7 +589,7 @@ class LakeTable:
                     ) from None
                 # a partition-spec change (rebucket) invalidates EVERY
                 # in-flight commit regardless of direction or append_only:
-                # our files/deltas are numbered under the old bucket count,
+                # our entries are numbered under the old bucket count,
                 # and blindly re-layering them (or committing our stale
                 # num_buckets) would corrupt pruning for every later read.
                 if any(
@@ -639,18 +614,20 @@ class LakeTable:
                                 " that this CoW merge also rewrote — rebase unsafe,"
                                 " re-run the merge against the new base"
                             ) from None
-                # rebase: re-layer our buckets on the winner's maps
-                new_files = dict(latest.get("files", {}) or {})
-                new_deltas = {
-                    k: list(v) for k, v in (latest.get("deltas", {}) or {}).items()
+                # rebase: re-layer our buckets' entries on the winner's
+                if append_only and added is None:
+                    raw = self._read_raw_any(manifest["parent"])
+                    parent = self._inflate(raw)["entries"] if raw else {}
+                    added = {
+                        k: [e for e in ents if e not in parent.get(k, [])]
+                        for k, ents in ours.items()
+                    }
+                layered = {
+                    k: list(latest["entries"].get(k, [])) + added[k]
+                    if append_only
+                    else ours[k]
+                    for k in ours
                 }
-                for b in touched_buckets:
-                    k = str(b)
-                    if append_only:
-                        new_deltas.setdefault(k, []).extend(ours_deltas.get(k, []))
-                    else:
-                        new_files[k] = ours_files.get(k, [])
-                        new_deltas.pop(k, None)
                 # additive schema merge: winner's fields + any new ones ours added
                 seen = {f["name"] for f in latest["schema"]["fields"]}
                 merged_schema = {
@@ -667,27 +644,12 @@ class LakeTable:
                         + int(summary.get("inserts") or 0)
                         - int(summary.get("deletes") or 0)
                     )
-                referenced = {f for fs in new_files.values() for f in fs} | {
-                    f for fs in new_deltas.values() for f in fs
-                }
-
-                def _merged(field_name: str) -> dict:
-                    merged = {
-                        **(latest.get(field_name, {}) or {}),
-                        **(attempt.get(field_name, {}) or {}),
-                    }
-                    return {k: v for k, v in merged.items() if k in referenced}
-
                 attempt = {
                     **attempt,
                     "version": latest["version"] + 1,
                     "parent": latest["version"],
                     "schema": merged_schema,
-                    "files": new_files,
-                    "deltas": new_deltas,
-                    "file_stats": _merged("file_stats"),
-                    "lsn_stats": _merged("lsn_stats"),
-                    "col_stats": _merged("col_stats"),
+                    "entries": latest["entries"].updated(layered),
                     "summary": summary,
                 }
         raise CommitConflict(
@@ -729,67 +691,53 @@ class LakeTable:
         shared by real commits (`_write_manifest`) and staged WAP
         commits (`_commit_staged`).
 
-        Format 2 (the 10^10-file property): the snapshot manifest holds
-        only ``pieces: {bucket -> [piece_path, flags]}``; per-bucket file
-        lists and per-file key/LSN bounds live in immutable content-
-        addressed piece files shared structurally across snapshots. With
-        ``touched_buckets`` known (every merge/compact/rebucket commit),
-        untouched buckets re-use the parent's piece pointers verbatim —
-        commit metadata I/O is ∝ the batch's write footprint plus one
-        O(num_buckets) pointer map, never ∝ the table's file inventory,
-        and a thousand-commit history stores each bucket state once.
-        Without it (format-1 parent, table create), every bucket is
-        content-hashed — same result, one linear pass. Pieces land
-        before the manifest link (the commit point); a losing or crashed
-        writer leaves only orphan pieces for vacuum.
+        The 10^10-file property: the snapshot manifest holds only
+        ``pieces: {bucket -> [piece_path, flags]}`` (flags ``f``/``d``:
+        the bucket has base/delta entries); each bucket's file entries
+        live in an immutable content-addressed piece shared structurally
+        across snapshots. With ``touched_buckets`` known (every writer's
+        commit), untouched buckets re-use the parent's piece pointers
+        verbatim — commit metadata I/O is ∝ the batch's write footprint
+        plus one O(num_buckets) pointer map, never ∝ the table's file
+        inventory, and a thousand-commit history stores each bucket
+        state once. Without it (table create), every bucket is content-
+        hashed. A bucket left with no entries gets no pointer. Pieces
+        land before the manifest link (the commit point); a losing or
+        crashed writer leaves only orphan pieces for vacuum.
         """
-        files = manifest.get("files", {}) or {}
-        deltas = manifest.get("deltas", {}) or {}
-        fstats = manifest.get("file_stats", {}) or {}
-        lstats = manifest.get("lsn_stats", {}) or {}
-        cstats = manifest.get("col_stats", {}) or {}
+        entries = manifest["entries"]
         parent_pieces: dict = {}
         if manifest.get("parent") is not None:
             try:
-                parent_pieces = (
-                    self._read_manifest_raw(manifest["parent"]).get("pieces", {}) or {}
-                )
+                parent_pieces = self._read_manifest_raw(manifest["parent"])["pieces"]
             except FileNotFoundError:
                 parent_pieces = {}
         pointers: dict[str, list] = {}
-        for b in sorted(set(files) | set(deltas), key=lambda s: (len(s), s)):
+        for b in sorted(entries, key=lambda s: (len(s), s)):
             if (
                 touched_buckets is not None
                 and b not in touched_buckets
                 and b in parent_pieces
             ):
-                # untouched bucket: carried forward verbatim from the
-                # parent by every writer (merge/compact/rebase), so the
-                # parent's piece IS its content — pointer copy, no I/O
+                # untouched bucket: every writer carries it forward
+                # verbatim, so the parent's piece IS its content —
+                # pointer copy, no I/O
                 pointers[b] = parent_pieces[b]
                 continue
-            flags = ("f" if b in files else "") + ("d" if b in deltas else "")
-            bfiles = list(files.get(b, []) or [])
-            bdeltas = list(deltas.get(b, []) or [])
-            refs = bfiles + bdeltas
-            content = {
-                "files": bfiles,
-                "deltas": bdeltas,
-                "file_stats": {r: fstats[r] for r in refs if r in fstats},
-                "lsn_stats": {r: lstats[r] for r in refs if r in lstats},
-                "col_stats": {r: cstats[r] for r in refs if r in cstats},
-            }
-            pointers[b] = [self._write_piece(content), flags]
+            ents = list(entries[b])
+            pointers[b] = [self._write_piece({"entries": ents}), _flags(ents)]
 
-        raw = {k: v for k, v in manifest.items() if k not in _PIECE_FIELDS}
-        raw["format"] = 2
+        raw = {
+            k: v
+            for k, v in manifest.items()
+            if k not in ("entries", "files", "deltas")
+        }
+        raw["format"] = MANIFEST_FORMAT
         raw["pieces"] = pointers
-        # keep the caller's (inline-shaped) manifest authoritative, but
-        # with the FRESH pointer map — stale "pieces" keys spread from a
-        # parent manifest would poison pointer-diff consumers (the MoR
-        # change-feed pruning)
-        manifest["format"] = 2
-        manifest["pieces"] = pointers
+        # keep the caller's manifest in step with what was written: the
+        # fresh pointer map and views over it (a dict spread from the
+        # parent would otherwise carry the parent's projections)
+        manifest.update(self._inflate(raw))
         return raw
 
     def _link_manifest(self, raw: dict, final: str) -> None:
@@ -815,11 +763,8 @@ class LakeTable:
         """Commit a snapshot: emit pieces, then atomically link the
         small pointer-map manifest into the version chain.
 
-        The cache is re-inflated from the RAW form rather than keeping
-        the caller's in-memory maps: merge builds those as ``_Overlay``s
-        over the parent's piece views, and caching them would chain one
-        overlay per batch across a long run (unbounded lookup depth and
-        a pin on every ancestor manifest)."""
+        The cache is re-inflated from the RAW form, so it holds a view
+        over the new pointer map, never a writer's per-bucket updates."""
         raw = self._emit_raw(manifest, touched_buckets)
         self._link_manifest(raw, self._manifest_path(manifest["version"]))
         self._manifest_cache = self._inflate(raw)
@@ -1016,7 +961,7 @@ class LakeTable:
         kind: str = "files",
         manifest: dict | None = None,
     ) -> list[str]:
-        files_map = (manifest or self.manifest).get(kind, {}) or {}
+        files_map = (manifest or self.manifest)[kind]
         keys = (
             files_map.keys() if buckets is None else [str(b) for b in buckets]
         )
@@ -1027,9 +972,7 @@ class LakeTable:
 
     def delta_buckets(self) -> list[int]:
         """Buckets that currently carry unmerged delta files (MoR)."""
-        return sorted(
-            int(b) for b, fs in (self.manifest.get("deltas", {}) or {}).items() if fs
-        )
+        return sorted(int(b) for b in self.manifest["deltas"])
 
     def _scan(self, files: list[str], schema) -> DataFrame:
         if not files:
@@ -1053,10 +996,9 @@ class LakeTable:
         ``where`` is a conjunction of ``(col, op, value)`` predicates
         (ops: = < <= > >= in between). Clean buckets skip every base
         file whose persisted per-file [min, max] bounds refute a
-        conjunct — key bounds are always available (``file_stats``);
-        payload columns need to be declared via ``stats_cols`` at
-        create time (``col_stats``, the Iceberg column-metrics
-        analogue). At 10^10 rows this is manifest-level skipping: a
+        conjunct — key bounds are always available; payload columns
+        need to be declared via ``stats_cols`` at create time (the
+        Iceberg column-metrics analogue). At 10^10 rows this is manifest-level skipping: a
         selective predicate never opens the non-matching files at all,
         on top of the row-group skipping Spark's parquet reader does
         inside the survivors. Delta-carrying buckets read fully (an
@@ -1071,7 +1013,7 @@ class LakeTable:
 
         Merge-on-read resolution is strictly per-bucket: clean buckets
         scan base files directly; delta-carrying buckets resolve. When
-        the manifest's per-file LSN bounds PROVE every delta row
+        the file entries' LSN bounds PROVE every delta row
         postdates every base row (always true in-contract — base only
         changes by folding older deltas), resolution is a broadcast
         anti-join of the base against the delta winners' keys plus an
@@ -1086,16 +1028,14 @@ class LakeTable:
 
         m = manifest or self.manifest
         phys = self._physical_schema(m)
-        files_map = m.get("files", {}) or {}
-        delta_map = m.get("deltas", {}) or {}
-        lsn_stats = m.get("lsn_stats", {}) or {}
+        files_map, delta_map = m["files"], m["deltas"]
         requested = (
             [str(b) for b in buckets]
             if buckets is not None
-            else sorted(set(files_map) | set(delta_map), key=int)
+            else sorted(m["entries"], key=int)
         )
-        dirty = [b for b in requested if delta_map.get(b)]
-        clean = [int(b) for b in requested if not delta_map.get(b)]
+        dirty = [b for b in requested if b in delta_map]
+        clean = [int(b) for b in requested if b not in delta_map]
         residual = None
         if where:
             _validate_where(where)
@@ -1109,22 +1049,20 @@ class LakeTable:
                 out = out.where(residual)
             return out if include_meta else out.drop(LSN_COL)
 
-        # split dirty buckets by whether the manifest's per-file LSN
-        # bounds PROVE every delta row postdates every base row (always
-        # true in-contract: base only changes by folding older deltas).
+        # split dirty buckets by whether the entries' LSN bounds PROVE
+        # every delta row postdates every base row (always true
+        # in-contract: base only changes by folding older deltas).
         # Proven buckets take the anti-join fast path — the (large) base
         # is never shuffled; only the (small) delta set is aggregated.
         fast: list[str] = []
         slow: list[str] = []
         for b in dirty:
-            bf = files_map.get(b, [])
-            df_ = delta_map.get(b, [])
-            if not bf:
+            ents = m["entries"][b]
+            if b not in files_map:
                 fast.append(b)  # no base: resolve among deltas alone
-                continue
-            if all(f in lsn_stats for f in bf) and all(f in lsn_stats for f in df_):
-                base_hi = max(lsn_stats[f][1] for f in bf)
-                delta_lo = min(lsn_stats[f][0] for f in df_)
+            elif all("lsn" in e for e in ents):
+                base_hi = max(e["lsn"][1] for e in ents if e["content"] == BASE)
+                delta_lo = min(e["lsn"][0] for e in ents if e["content"] == DELTA)
                 (fast if delta_lo > base_hi else slow).append(b)
             else:
                 slow.append(b)
@@ -1132,15 +1070,15 @@ class LakeTable:
         # base is then never shuffled); a delta too big to broadcast
         # would force a sort-merge anti-join that shuffles AND sorts the
         # base — worse than one hash aggregate. Fall back in that case.
-        if fast and any(files_map.get(b) for b in fast):
+        if any(b in files_map for b in fast):
             delta_bytes = sum(
                 os.path.getsize(os.path.join(self.path, f))
                 for b in fast
                 for f in delta_map.get(b, [])
             )
             if delta_bytes >= 32 * 1024 * 1024:
-                slow.extend(b for b in fast if files_map.get(b))
-                fast = [b for b in fast if not files_map.get(b)]
+                slow.extend(b for b in fast if b in files_map)
+                fast = [b for b in fast if b not in files_map]
 
         import pyspark.sql.types as T
 
@@ -1207,14 +1145,6 @@ class LakeTable:
         os.makedirs(os.path.join(self.path, rel), exist_ok=True)
         return rel
 
-    def _collect_file_stats(
-        self, bucket_files: dict[str, list[str]], column: str | None = None
-    ) -> dict[str, list]:
-        """Per-file [min, max] of ``column`` (default: the bucketing key)
-        — see ``_collect_file_stats_multi``."""
-        column = column or self.key_cols[0]
-        return self._collect_file_stats_multi(bucket_files, [column])[column]
-
     # Past this many files, footer stats are collected executor-side
     # (one Spark job over the file list) instead of the serial driver
     # loop — a full-table compact/rebucket rewrite at scale touches
@@ -1223,75 +1153,53 @@ class LakeTable:
     # under it and keep the zero-job driver path.
     DISTRIBUTED_STATS_MIN_FILES = 256
 
-    def _collect_file_stats_multi(
-        self,
-        bucket_files: dict[str, list[str]],
-        columns: list[str],
-        null_counts_for: list[str] | None = None,
-    ) -> dict[str, dict[str, list]]:
-        """Per-file [min, max] of each of ``columns`` from parquet footer
-        statistics, opening EVERY footer exactly ONCE (a commit needs
-        both key bounds and LSN bounds; reading hundreds of just-written
-        footers twice was a measurable slice of the per-batch constant).
-        Driver-side, local files — the Iceberg per-file column-bounds
-        analogue. The range-partitioned write makes files key-sorted
-        ranges, so key bounds are tight and point lookups can skip
-        sibling files; LSN bounds prove delta/base disjointness for the
-        fast MoR resolve. (Parquet truncates very long binary stats;
-        keys here are short ids — a deployment with long keys should
-        compare against the truncated max as a prefix upper bound.)
-
-        Columns in ``null_counts_for`` (the declared stats columns; key
-        and LSN are never null) get extended ``[lo, hi, null_count,
-        num_rows]`` entries from the SAME footer pass — including
-        ``[None, None, nc, nr]`` for files whose min/max are absent or
-        non-JSON-safe but whose null count is known, so an all-null
-        file is skippable by every null-rejecting predicate and
-        ``is_null``/``not_null`` prune on the counts.
+    def _file_entries(
+        self, bucket_files: dict[str, list[str]], content: str = BASE
+    ) -> dict[str, list[dict]]:
+        """bucket -> [file entry] for just-written files — the one place
+        entries are built, from ONE parquet footer pass per file. Base
+        entries carry the bucketing key's bounds (tight: the range-
+        partitioned write makes files key-sorted ranges, so point
+        lookups skip sibling files), LSN bounds (the fast MoR resolve
+        proof) and ``cols`` bounds of the declared ``stats_cols`` as
+        ``[lo, hi, null_count, num_rows]`` (``lo``/``hi`` None when
+        min/max are absent or non-JSON-safe, so all-null files still
+        prune). Delta entries carry LSN bounds only: a delta-carrying
+        bucket is never file-pruned. A bound the footer cannot give is
+        left out (stats are an optimization; readers keep such files).
 
         Driver-side serial loop up to ``DISTRIBUTED_STATS_MIN_FILES``
         files (per-batch merges — zero extra Spark jobs); past it the
         same per-file reader runs executor-side over a parallelized
-        file list (full-table compact/rebucket rewrites — the serial
-        loop was their long driver tail)."""
-        with_nulls = set(null_counts_for or ())
-        pairs = [
-            (rel, os.path.join(self.path, rel))
-            for rels in bucket_files.values()
-            for rel in rels
-        ]
-        out: dict[str, dict[str, list]] = {c: {} for c in columns}
-        if len(pairs) >= self.DISTRIBUTED_STATS_MIN_FILES:
-            cols = list(columns)
-            wn = frozenset(with_nulls)
+        file list (full-table compact/rebucket rewrites)."""
+        key0 = self.key_cols[0]
+        stats = []
+        if content == BASE:
+            stats = [c for c in self.stats_cols if c not in (key0, LSN_COL)]
+        columns = ([key0] if content == BASE else []) + [LSN_COL] + stats
+        nulls = frozenset(stats)
+        pairs = [(b, rel) for b, rels in bucket_files.items() for rel in rels]
+        paths = [os.path.join(self.path, rel) for _, rel in pairs]
+        if len(paths) >= self.DISTRIBUTED_STATS_MIN_FILES:
             sc = self.spark.sparkContext
-            n_parts = max(1, min(len(pairs) // 32, sc.defaultParallelism))
-            collected = (
-                sc.parallelize(pairs, n_parts)
-                .map(lambda p: (p[0], _file_footer_stats(p[1], cols, wn)))
+            n_parts = max(1, min(len(paths) // 32, sc.defaultParallelism))
+            footers = (
+                sc.parallelize(paths, n_parts)
+                .map(lambda p: _file_footer_stats(p, columns, nulls))
                 .collect()
             )
-            for rel, per_col in collected:
-                for c, entry in per_col.items():
-                    out[c][rel] = entry
-            return out
-        for rel, ap in pairs:
-            for c, entry in _file_footer_stats(ap, columns, with_nulls).items():
-                out[c][rel] = entry
-        return out
-
-
-    @staticmethod
-    def _invert_col_stats(
-        multi: dict[str, dict[str, list]], cols: list[str]
-    ) -> dict[str, dict[str, list]]:
-        """Re-key ``_collect_file_stats_multi`` output (col -> rel ->
-        bounds) into the manifest's ``col_stats`` shape (rel -> col ->
-        bounds) for the declared stats columns."""
-        out: dict[str, dict[str, list]] = {}
-        for c in cols:
-            for rel, bounds in (multi.get(c) or {}).items():
-                out.setdefault(rel, {})[c] = bounds
+        else:
+            footers = [_file_footer_stats(p, columns, nulls) for p in paths]
+        out: dict[str, list[dict]] = {}
+        for (b, rel), st in zip(pairs, footers):
+            e = {"path": rel, "content": content}
+            if key0 in st:
+                e["key"] = st[key0]
+            if LSN_COL in st:
+                e["lsn"] = st[LSN_COL]
+            if cols := {c: st[c] for c in stats if c in st}:
+                e["cols"] = cols
+            out.setdefault(b, []).append(e)
         return out
 
     @staticmethod
@@ -1431,41 +1339,29 @@ class LakeTable:
     def _pruned_base_files(
         self, bucket_ids: list[int], where, manifest: dict
     ) -> tuple[list[str], int]:
-        """Relative base-file paths of ``bucket_ids`` that the per-file
-        bounds cannot refute for ``where``, plus the skipped count.
-        Bounds sources: ``file_stats`` (the bucketing key — always
-        collected; the range-partitioned write makes those bounds tight
-        and disjoint) and ``col_stats`` (declared ``stats_cols``). A
-        file lacking bounds for a referenced column is kept — bounds
-        are an optimization, absent e.g. for all-null or pre-schema-
-        evolution files. Driver-side cost is one piece load per bucket
-        examined, never any data I/O."""
+        """Relative base-file paths of ``bucket_ids`` that the file
+        entries' bounds cannot refute for ``where``, plus the skipped
+        count. Bounds: ``key`` (the bucketing key — always collected;
+        the range-partitioned write makes them tight and disjoint) and
+        ``cols`` (declared ``stats_cols``). A file lacking bounds for a
+        referenced column is kept — bounds are an optimization, absent
+        e.g. for all-null or pre-schema-evolution files. Driver-side
+        cost is one piece load per bucket examined, never any data
+        I/O."""
         key0 = manifest["key_cols"][0]
-        fstats = manifest.get("file_stats", {}) or {}
-        cstats = manifest.get("col_stats", {}) or {}
-        files_map = manifest.get("files", {}) or {}
         kept: list[str] = []
         skipped = 0
         for b in bucket_ids:
-            for rel in files_map.get(str(b), []) or []:
-                cbounds = None  # per-file col_stats, loaded lazily
-                keep = True
+            for e in manifest["entries"].get(str(b), []):
+                if e["content"] != BASE:
+                    continue
                 for col, op, val in where:
-                    if col == key0:
-                        bounds = fstats.get(rel)
-                    else:
-                        if cbounds is None:
-                            cbounds = cstats.get(rel) or {}
-                        bounds = cbounds.get(col)
-                    if bounds is not None and not _bounds_may_match(
-                        bounds, op, val
-                    ):
-                        keep = False
+                    bounds = e.get("key") if col == key0 else e.get("cols", {}).get(col)
+                    if bounds is not None and not _bounds_may_match(bounds, op, val):
+                        skipped += 1
                         break
-                if keep:
-                    kept.append(rel)
                 else:
-                    skipped += 1
+                    kept.append(e["path"])
         return kept, skipped
 
     def prune_report(
@@ -1481,22 +1377,19 @@ class LakeTable:
         precede filtering)."""
         m = manifest or self.manifest
         _validate_where(where)
-        files_map = m.get("files", {}) or {}
-        delta_map = m.get("deltas", {}) or {}
+        files_map, delta_map = m["files"], m["deltas"]
         requested = (
             [str(b) for b in buckets]
             if buckets is not None
-            else sorted(set(files_map) | set(delta_map), key=int)
+            else sorted(m["entries"], key=int)
         )
-        clean = [int(b) for b in requested if not delta_map.get(b)]
-        dirty = [b for b in requested if delta_map.get(b)]
+        clean = [int(b) for b in requested if b not in delta_map]
+        dirty = [b for b in requested if b in delta_map]
         kept, skipped = self._pruned_base_files(clean, where, m)
         return {
             "kept_files": len(kept),
             "skipped_files": skipped,
-            "unprunable_dirty_files": sum(
-                len(files_map.get(b, []) or []) for b in dirty
-            ),
+            "unprunable_dirty_files": sum(len(files_map.get(b, [])) for b in dirty),
         }
 
     def lookup(self, key_value) -> DataFrame:
@@ -1522,15 +1415,11 @@ class LakeTable:
         )
         key0 = self.key_cols[0]
         m = self.manifest
-        stats = m.get("file_stats", {}) or {}
-        dirty = (m.get("deltas", {}) or {}).get(str(b))
-        if not dirty:
-            rels = (m.get("files", {}) or {}).get(str(b), [])
+        if str(b) not in m["deltas"]:
             pruned = [
-                os.path.join(self.path, rel)
-                for rel in rels
-                if rel not in stats
-                or (stats[rel][0] <= key_value <= stats[rel][1])
+                os.path.join(self.path, e["path"])
+                for e in m["entries"].get(str(b), [])
+                if "key" not in e or e["key"][0] <= key_value <= e["key"][1]
             ]
             df = self._scan(pruned, self._physical_schema(m)).drop(LSN_COL)
             return df.where(F.col(key0) == key_value)

@@ -13,7 +13,31 @@ from pyspark.sql import SparkSession
 
 
 def default_cores() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half the memory limit — the
+    cgroup's when one is set, the machine's otherwise. In local mode the
+    driver heap holds every executor task, and the other half is left
+    to the Python workers, off-heap buffers and the page cache."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limit = min(limit, int(raw))
+    return f"{limit // 2 >> 20}m"
 
 
 def get_spark(
@@ -27,7 +51,8 @@ def get_spark(
 
     ``cores`` controls ``local[N]`` parallelism; shuffle partitions default
     to the core count so small-scale runs don't fragment into 200 tiny
-    tasks while large runs still saturate every slot.
+    tasks while large runs still saturate every slot. Unset sizes come
+    from the box (``default_cores``, ``default_driver_memory``).
     """
     n = cores or default_cores()
     sp = shuffle_partitions or n
@@ -54,7 +79,7 @@ def get_spark(
         # throws instead
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -10,12 +10,9 @@ from gene_etl_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(
-        app_name="gene-etl-spark-tests",
-        cores=8,
-        shuffle_partitions=8,
-        driver_memory="8g",
-    )
+    # sized from the box (SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM win);
+    # a test that needs a given partition count sets it on itself
+    s = get_spark(app_name="gene-etl-spark-tests")
     yield s
 
 

@@ -93,3 +93,63 @@ def test_policy_bounds_read_amplification_over_50_batches(spark, workdir):
     )
     assert len(actual) == len(exp)
     assert (actual["text"].values == exp["text"].values).all()
+
+
+def test_salted_delta_write_file_count_is_pinned(spark, workdir):
+    """With shuffle partitions above num_buckets / 2 the MoR delta write
+    salts each bucket over nsplit = ceil(2 * shuffle / num_buckets)
+    write tasks, so one commit can add up to nsplit delta files to a
+    bucket. Pin that bound, and that the threshold policy brings every
+    bucket back to at most K delta files. The salt reuses the bucket's
+    key hash, so it splits a bucket only when nsplit does not divide
+    num_buckets — 4 buckets at 6 shuffle partitions give nsplit 3."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from gene_etl_spark.lake import maintenance as mt
+    from gene_etl_spark.lake.table import LakeTable
+
+    num_buckets, shuffle, nsplit, k = 4, 6, 3, 2
+    schema = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType()),
+            T.StructField("turn_idx", T.IntegerType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("ts", T.TimestampType()),
+        ]
+    )
+    t = LakeTable.create(
+        spark, os.path.join(workdir, "lake"), schema, ["conv_id", "turn_idx"],
+        num_buckets,
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+    try:
+        most = 0
+        for batch in range(3):
+            lsn0 = batch * 1000
+            rows = [
+                (lsn0 + i + 1, "U", f"c{i % 40}", i // 40, f"b{batch}",
+                 dt.datetime(2024, 1, 1))
+                for i in range(200)
+            ]
+            upd = spark.createDataFrame(
+                rows,
+                "lsn long, op string, conv_id string, turn_idx int,"
+                " text string, ts timestamp",
+            )
+            before = {b: len(fs) for b, fs in t.manifest["deltas"].items()}
+            t.merge(upd, batch_id=f"b{batch}", mode="mor",
+                    start_lsn=lsn0, end_lsn=lsn0 + 200)
+            added = [
+                len(fs) - before.get(b, 0) for b, fs in t.manifest["deltas"].items()
+            ]
+            assert max(added) <= nsplit, added
+            most = max(most, max(added))
+        assert most > 1  # the salted split actually ran
+        mt.compact_if_needed(t, max_delta_files=k)
+        assert all(len(fs) <= k for fs in t.manifest["deltas"].values())
+        assert t.read().where("text = 'b2'").count() == 200
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -136,8 +136,9 @@ def test_point_lookup_skips_files_by_key_bounds(spark, workdir):
     table = runner.table
     bucket_files = table.manifest["files"]["0"]
     assert len(bucket_files) >= 2  # range partitioner spread the bucket
-    stats = table.manifest.get("file_stats", {})
-    assert set(stats) == set(bucket_files)  # bounds recorded per file
+    ents = table.manifest["entries"]["0"]
+    assert [e["path"] for e in ents] == bucket_files
+    assert all("key" in e for e in ents)  # bounds recorded per file
 
     key = table.read().select("conv_id").orderBy("conv_id").first()["conv_id"]
     got = table.lookup(key)

@@ -7,10 +7,10 @@ bucket), the Iceberg column-metrics analogue. These tests pin:
 
 - bounds persisted by CoW merges skip refuted files; the residual
   filter keeps results identical to a full-scan filter,
-- key-column pruning works with no declared stats_cols (file_stats),
+- key-column pruning works with no declared stats_cols (entry key bounds),
 - delta-carrying buckets are NEVER pruned (an unmatched base row may be
   updated INTO the predicate — resolution precedes filtering),
-- compact / rebucket / rollback all carry or recompute col_stats,
+- compact / rebucket / rollback all carry or recompute column bounds,
 - files without bounds for a referenced column are kept (conservative),
 - where-vocabulary validation errors.
 """
@@ -82,6 +82,15 @@ def seeded(spark, tmp_path):
     return tbl
 
 
+def _base_entries(tbl):
+    return [
+        e
+        for ents in tbl.manifest["entries"].values()
+        for e in ents
+        if e["content"] == "base"
+    ]
+
+
 def _expected(tbl, where_col):
     return sorted(
         tbl.read().where(where_col).select("conv_id", "turn_idx", "score")
@@ -91,12 +100,11 @@ def _expected(tbl, where_col):
 
 def test_stats_cols_persisted_and_pruning_is_lossless(seeded):
     assert seeded.stats_cols == ["score"]
-    cstats = seeded.manifest.get("col_stats", {}) or {}
     # every base file carries score bounds
     all_files = [r for fs in seeded.manifest["files"].values() for r in fs]
-    assert all_files and all(
-        "score" in (cstats.get(r) or {}) for r in all_files
-    )
+    ents = _base_entries(seeded)
+    assert all_files and sorted(e["path"] for e in ents) == sorted(all_files)
+    assert all("score" in e.get("cols", {}) for e in ents)
 
     where = [("score", "between", (2000, 2005))]
     rep = seeded.prune_report(where)
@@ -212,12 +220,8 @@ def test_sorted_sized_compaction_makes_stats_disjoint(spark, tmp_path):
     mt.compact(tbl, target_file_size_bytes=4096, sort_cols=["score"])
     n_files = sum(len(fs) for fs in tbl.manifest["files"].values())
     assert n_files > 1  # the sized rewrite actually split the bucket
-    cstats = tbl.manifest.get("col_stats", {}) or {}
-    bounds = sorted(
-        tuple(cstats[r]["score"][:2])
-        for fs in tbl.manifest["files"].values()
-        for r in fs
-    )
+    bounds = sorted(tuple(e["cols"]["score"][:2]) for e in _base_entries(tbl))
+    assert len(bounds) == n_files
     for (_, hi), (lo2, _) in zip(bounds, bounds[1:]):
         assert hi < lo2  # disjoint score ranges across files
     rep = tbl.prune_report([("score", "=", 1702)])
@@ -243,7 +247,7 @@ def test_rollback_carries_col_stats(seeded, spark):
 def test_time_travel_reads_skip_with_historical_stats(seeded, spark):
     v1 = seeded.version
     # move conv-2 turn 0 out of its old range; the historical manifest's
-    # col_stats still prune for the v1 read
+    # column bounds still prune for the v1 read
     _merge(seeded, spark, [("conv-2", 0, 999_000, "U")], "move", 400)
     where = [("score", "between", (2000, 2005))]
     live = seeded.read(where=where).count()
@@ -268,9 +272,8 @@ def test_null_count_stats_prune_null_predicates(spark, tmp_path):
     rows += [(f"val-{i}", t, 100 * i + t, "I") for i in range(3) for t in range(4)]
     _merge(tbl, spark, rows, "seed", 1)
 
-    cstats = tbl.manifest.get("col_stats", {}) or {}
-    all_files = [r for fs in tbl.manifest["files"].values() for r in fs]
-    ents = {r: cstats[r]["score"] for r in all_files}
+    ents = {e["path"]: e["cols"]["score"] for e in _base_entries(tbl)}
+    assert sorted(ents) == sorted(r for fs in tbl.manifest["files"].values() for r in fs)
     assert all(len(e) == 4 for e in ents.values())  # nulls from the same pass
     all_null = {r for r, e in ents.items() if e[2] == e[3]}
     no_null = {r for r, e in ents.items() if e[2] == 0}

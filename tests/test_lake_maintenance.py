@@ -126,9 +126,9 @@ def test_sized_sorted_compaction_and_lookup_pruning(spark, workdir):
     assert multi, "tiny target must split at least one bucket"
 
     # range-sliced: per-file key bounds are disjoint (boundaries may touch)
-    stats = m.get("file_stats") or {}
-    for fs in multi.values():
-        bounds = sorted(tuple(stats[f]) for f in fs)
+    for b in multi:
+        bounds = sorted(tuple(e["key"]) for e in m["entries"][b])
+        assert len(bounds) == len(multi[b])
         for (_, hi1), (lo2, _) in zip(bounds, bounds[1:]):
             assert lo2 >= hi1
 

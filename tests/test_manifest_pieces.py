@@ -1,9 +1,9 @@
-"""Format-2 manifests: content-addressed per-bucket pieces.
+"""Piece-backed manifests: content-addressed per-bucket file entries.
 
 The 10^10-file metadata property (round 5): a snapshot manifest is a
-small pointer map; per-bucket file lists + per-file stats live in
-immutable content-addressed piece files shared structurally across
-snapshots. These tests pin:
+small pointer map; each bucket's file entries (path, base/delta, key,
+LSN and column bounds) live in an immutable content-addressed piece
+file shared structurally across snapshots. These tests pin:
 
 - commit metadata write cost ∝ touched buckets (untouched pointers are
   byte-identical reuses of the parent's),
@@ -11,8 +11,7 @@ snapshots. These tests pin:
   commit count grows,
 - lazy reads: a point lookup / bucket-pruned read loads only its own
   bucket's piece,
-- format-1 (inline-map) manifests still load, and a format-2 commit
-  layers on top of one,
+- a manifest of any other format is refused on load,
 - vacuum reclaims pieces no live snapshot references, and piece loss on
   an expired snapshot fails loudly rather than reading wrong data.
 """
@@ -27,8 +26,8 @@ from pyspark.sql import types as T
 from gene_etl_spark.lake import maintenance as mt
 from gene_etl_spark.lake.table import (
     MANIFEST_DIR,
+    MANIFEST_FORMAT,
     PIECE_DIR,
-    _PIECE_FIELDS,
     LakeTable,
 )
 
@@ -92,8 +91,8 @@ def seeded(spark, tmp_path):
 def test_manifest_is_pointer_map_and_untouched_pointers_reused(seeded):
     raw_prev, raw_last = _raw(seeded, 6), _raw(seeded, 7)
     for raw in (raw_prev, raw_last):
-        assert raw["format"] == 2 and "pieces" in raw
-        for field in _PIECE_FIELDS:
+        assert raw["format"] == MANIFEST_FORMAT and "pieces" in raw
+        for field in ("entries", "files", "deltas"):
             assert field not in raw
     # the last commit touched one conversation -> at most a couple of
     # buckets changed pointers; everything else is a byte-identical reuse
@@ -146,17 +145,14 @@ def test_point_lookup_loads_single_piece(spark, seeded):
     assert len(fresh2._piece_cache) == 1
 
 
-def test_format1_manifest_back_compat(spark, seeded):
-    """A manifest with inline maps (the pre-round-5 format) loads, reads,
-    and accepts a format-2 commit on top."""
+def test_unknown_manifest_format_is_refused(spark, seeded):
+    """A manifest of any other format (e.g. the old inline maps) fails
+    loudly on load instead of reading as an empty or partial table."""
     m = seeded.manifest
     inline = {
-        **{k: v for k, v in m.items() if k not in ("pieces", "format")},
+        **{k: v for k, v in m.items() if k not in ("pieces", "format", "entries")},
         "files": {b: list(fs) for b, fs in m["files"].items()},
-        "deltas": {b: list(fs) for b, fs in (m.get("deltas", {}) or {}).items()},
-        "file_stats": dict(m.get("file_stats", {}) or {}),
-        "lsn_stats": dict(m.get("lsn_stats", {}) or {}),
-        "col_stats": dict(m.get("col_stats", {}) or {}),
+        "deltas": {},
         "version": m["version"] + 1,
         "parent": m["version"],
     }
@@ -164,13 +160,8 @@ def test_format1_manifest_back_compat(spark, seeded):
         os.path.join(seeded.path, MANIFEST_DIR, f"v{inline['version']}.json"), "w"
     ) as f:
         json.dump(inline, f)
-    reopened = LakeTable.load(spark, seeded.path)
-    assert "pieces" not in reopened.manifest
-    n_before = reopened.read().count()
-    _merge(reopened, spark, [("conv-9", 3, "post-v1", "U")], "post-v1", 2000)
-    assert _raw(reopened, reopened.version)["format"] == 2
-    assert reopened.read().count() == n_before + 1
-    assert reopened.lookup("conv-9").where("turn_idx = 3").count() == 1
+    with pytest.raises(ValueError, match="format None"):
+        LakeTable.load(spark, seeded.path)
 
 
 def test_vacuum_reclaims_unreferenced_pieces(spark, seeded):

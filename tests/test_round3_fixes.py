@@ -11,7 +11,7 @@ from pyspark.sql import types as T
 
 from gene_etl_spark.config import IngestConfig
 from gene_etl_spark.lake.changes import read_changes
-from gene_etl_spark.lake.table import CommitConflict, LakeTable
+from gene_etl_spark.lake.table import CommitConflict, LakeTable, _file_footer_stats
 from gene_etl_spark.operators.dedup import lww_dedup
 from gene_etl_spark.sources.binlog import BinlogSource
 from gene_etl_spark.sources.simulate import generate_change_stream
@@ -146,7 +146,7 @@ def test_rebase_with_parent_none_checks_all_history(spark, workdir):
             "schema": json.loads(SCHEMA.json()),
             "key_cols": ["conv_id", "turn_idx"],
             "num_buckets": 8,
-            "files": {str(b): [] for b in seed_buckets},
+            "entries": {},
             "properties": {"batch_id": batch_id},
             "summary": {"operation": "merge", "touched_buckets": seed_buckets},
         }
@@ -178,14 +178,18 @@ def test_file_stats_json_safe_for_typed_columns(spark, workdir):
         ),
         os.path.join(t.path, rel),
     )
+    path = os.path.join(t.path, rel)
     for col in ("ts", "blob"):
-        stats = t._collect_file_stats({"0": [rel]}, column=col)
+        stats = _file_footer_stats(path, [col], set())
         json.dumps(stats)  # must never raise
         assert stats == {}  # typed bounds are skipped, not coerced lossily
-    # plain string keys still produce usable bounds
-    stats = t._collect_file_stats({"0": [rel]}, column="conv_id")
+    # plain string keys still produce usable bounds, in the file entry too
+    stats = _file_footer_stats(path, ["conv_id"], set())
     json.dumps(stats)
-    assert stats[rel] == ["a", "b"]
+    assert stats["conv_id"] == ["a", "b"]
+    (entry,) = t._file_entries({"0": [rel]})["0"]
+    json.dumps(entry)
+    assert entry["key"] == ["a", "b"]
 
 
 def test_source_snapshot_lineage_recorded_and_reconciles(spark, workdir):

@@ -33,8 +33,8 @@ def test_read_slice_prunes_tranche_files(spark, workdir):
     assert n == full.count()
 
 
-def test_collect_file_stats_multi_matches_single(spark, workdir):
-    from gene_etl_spark.lake.table import LSN_COL, LakeTable
+def test_file_entries_one_footer_pass_matches_single_column(spark, workdir):
+    from gene_etl_spark.lake.table import LSN_COL, LakeTable, _file_footer_stats
     import pyspark.sql.types as T
 
     schema = T.StructType(
@@ -58,10 +58,16 @@ def test_collect_file_stats_multi_matches_single(spark, workdir):
     t.merge(df, batch_id="b1", start_lsn=0, end_lsn=200)
     m = t.manifest
     bucket_files = {b: fs for b, fs in m["files"].items() if fs}
-    both = t._collect_file_stats_multi(bucket_files, ["conv_id", LSN_COL])
-    assert both["conv_id"] == t._collect_file_stats(bucket_files, "conv_id")
-    assert both[LSN_COL] == t._collect_file_stats(bucket_files, LSN_COL)
-    assert both[LSN_COL]  # LSN stats actually recorded
+    entries = t._file_entries(bucket_files)
+    for b, ents in entries.items():
+        assert [e["path"] for e in ents] == bucket_files[b]
+        for e in ents:
+            path = os.path.join(t.path, e["path"])
+            assert e["key"] == _file_footer_stats(path, ["conv_id"], set())["conv_id"]
+            assert e["lsn"] == _file_footer_stats(path, [LSN_COL], set())[LSN_COL]
+    assert entries  # LSN stats actually recorded
+    # the committed entries are the ones the footer pass builds
+    assert {b: list(m["entries"][b]) for b in bucket_files} == entries
 
 
 def test_packing_ids_unique_across_many_bins_per_group(spark):

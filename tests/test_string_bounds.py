@@ -121,10 +121,10 @@ def long_text_table(spark, tmp_path):
 def test_persisted_bounds_are_truncated_and_metadata_stays_small(long_text_table):
     tbl = long_text_table
     seen = 0
-    # col_stats shape: rel -> {col: bounds}
-    stats = tbl.manifest.get("col_stats") or {}
-    for rel, cols in dict(stats).items():
-        b = cols.get("body")
+    # base file entries carry {col: bounds} under "cols"
+    ents = [e for es in tbl.manifest["entries"].values() for e in es]
+    for e in ents:
+        b = e.get("cols", {}).get("body")
         if not b or b[0] is None:
             continue
         seen += 1
@@ -168,14 +168,15 @@ def test_distributed_footer_stats_match_driver_loop(long_text_table):
     collection must produce exactly the driver loop's output."""
     tbl = long_text_table
     files = {b: list(fs) for b, fs in dict(tbl.manifest["files"]).items()}
-    cols = ["k", "_lsn", "body"]
     prev = LakeTable.DISTRIBUTED_STATS_MIN_FILES
     try:
         LakeTable.DISTRIBUTED_STATS_MIN_FILES = 10**9
-        serial = tbl._collect_file_stats_multi(files, cols, null_counts_for=["body"])
+        serial = tbl._file_entries(files)
         LakeTable.DISTRIBUTED_STATS_MIN_FILES = 1
-        dist = tbl._collect_file_stats_multi(files, cols, null_counts_for=["body"])
+        dist = tbl._file_entries(files)
     finally:
         LakeTable.DISTRIBUTED_STATS_MIN_FILES = prev
     assert serial == dist
-    assert serial["k"], "key bounds expected"
+    ents = [e for es in serial.values() for e in es]
+    assert ents and all("key" in e for e in ents), "key bounds expected"
+    assert all(len(e["cols"]["body"]) == 4 for e in ents)  # null counts too
